@@ -22,22 +22,8 @@ def _c(col: str | Column) -> Column:
 # --- tokenization ------------------------------------------------------------
 def tokens(col: str | Column) -> Column:
     """Whitespace tokenization: split on runs of whitespace after
-    trimming. The 'BPE-ish' variant below handles punctuation."""
+    trimming."""
     return F.split(F.trim(_c(col)), r"\s+")
-
-
-def bpe_ish_tokens(col: str | Column) -> Column:
-    """Regex token counting in the spirit of BPE pre-tokenizers:
-    word pieces = letter runs, digit runs, or single non-space symbols.
-    Implemented as a regex split on boundaries; good enough for token
-    *counting* without a vocab."""
-    # insert a space at letter/digit/symbol boundaries, then split
-    spaced = F.regexp_replace(
-        F.regexp_replace(_c(col), r"([0-9]+)", r" $1 "),
-        r"([^\sA-Za-z0-9]+)",
-        r" $1 ",
-    )
-    return F.split(F.trim(spaced), r"\s+")
 
 
 def token_count(col: str | Column) -> Column:
@@ -45,20 +31,6 @@ def token_count(col: str | Column) -> Column:
 
 
 # --- n-grams / shingles ------------------------------------------------------
-def char_ngrams(col: str | Column, n: int = 3) -> Column:
-    """Character n-grams as an array<string>; empty array for strings
-    shorter than n. Built with sequence+transform (no explode needed
-    until the caller wants one)."""
-    c = _c(col)
-    return F.when(
-        F.length(c) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(c) - (n - 1)),
-            lambda i: c.substr(i, F.lit(n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def shingles_from_tokens(tok_col: Column, n: int = 3) -> Column:
     """Word n-gram shingles from an ALREADY-MATERIALIZED token-array
     column. ``tok_col`` must be a plain column reference (not an inline

@@ -666,23 +666,6 @@ def _sig_aggs(num_hashes: int) -> list[F.Column]:
     ]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, sig_0..sig_{k-1}): per-doc MinHash signature, each a 31-bit
-    affine permutation of the shingle's base hash (see _base_hash /
-    _sig_aggs). One groupBy per doc computes all k mins in a single
-    aggregation pass (map-side combinable)."""
-    sh = _doc_shingles(df, id_col, text_col, shingle_n).withColumn(
-        "hp", _base_hash(F.col("shingle"))
-    )
-    return sh.groupBy("id").agg(*_sig_aggs(num_hashes))
-
-
 def _band_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, key) rows from a signature table: each band's key is
     the concatenation of its rows/band signature slots. One explode —
@@ -1249,17 +1232,6 @@ def hamming_near_pairs(
         cands.withColumn("hamming", hamming.cast("bigint"))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
-
-
-def simhash_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Docs sharing an identical 64-bit SimHash (near-dup up to SimHash
-    resolution): groups with >1 member, listing member ids sorted."""
-    sh = simhash64(df, id_col, text_col)
-    return (
-        sh.groupBy("simhash")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"), F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
     )
 
 

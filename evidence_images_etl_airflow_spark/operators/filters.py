@@ -1,14 +1,15 @@
-"""P2-P4 — row filters (SURVEY.md §2.2).
+"""P2 — the non-empty row filter (SURVEY.md §2.2). P3 and P4 are plain
+inline predicates in the queries that use them.
 
-All plain Catalyst predicates; when applied directly after a scan they
-push down into the parquet reader (row-group skipping) — the reference
-applies them only after full download + transform
+A plain Catalyst predicate; when applied directly after a scan it
+pushes down into the parquet reader (row-group skipping) — the reference
+applies it only after full download + transform
 (evidence_images_processing.py:416).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -21,15 +22,3 @@ def non_empty_rows(df: DataFrame, column: str = "EvidenceImageURL") -> DataFrame
     We match the SQL semantics: NULL and '' both removed, documented.
     """
     return df.filter(F.col(column) != "")
-
-
-def status_filter(df: DataFrame, column: str = "sessionstatus", value: str = "Complete") -> DataFrame:
-    """P3: ``WHERE s.sessionstatus = 'Complete'`` (add_image_data.py:50)."""
-    return df.filter(F.col(column) == value)
-
-
-def multi_value_rows(column: str, delim: str = ",") -> Column:
-    """P4: the commented-out ``LIKE '%,%'`` predicate
-    (evidence_images_processing.py:234) — rows whose name field holds a
-    delimited list."""
-    return F.col(column).contains(delim)

@@ -23,6 +23,8 @@ itself, so results are exact, never approximate.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -30,6 +32,7 @@ from evidence_images_etl_airflow_spark.operators.dedup import (
     bloom_build,
     bloom_might_contain,
 )
+from evidence_images_etl_airflow_spark.session import parallel_actions
 
 
 def build_key_bloom(
@@ -175,7 +178,9 @@ def plan_join_chain(
 
     1. price every edge EXACTLY: |A ⋈ B| via :func:`estimate_join_rows`
        (degree aggregations at distinct-key cardinality — the
-       pre-flight cost, never the join output);
+       pre-flight cost, never the join output). These pre-flight jobs
+       run concurrently in the caller's Spark job group, so
+       ``cancelJobGroup`` cancels them with the rest of the query;
     2. start from the cheapest edge (ties: lexicographic edge label);
     3. repeatedly attach the frontier table minimizing the CHAINED
        estimate ``est(R ⋈ T) = est(R) * |X ⋈ T| div |X|`` where X is
@@ -245,31 +250,18 @@ def plan_join_chain(
     # is the degree sum, so it falls out of the same aggregations; a
     # plain count() keeps the code obvious — both are one scan).
     # All pre-flight jobs are mutually independent 1-row aggregates, so
-    # they are submitted CONCURRENTLY from a small driver pool (guide
-    # §2.6 "overlap independent jobs"): Spark's scheduler interleaves
-    # their tasks, so the pre-flight wall clock is ~max instead of sum
-    # — on a cluster the later jobs back-fill executors idled by the
-    # earlier jobs' stage tails. Decisions are unchanged: the same
-    # exact statistics arrive, just sooner. CAVEAT (r16 ADVICE): jobs
-    # submitted from pool workers do NOT inherit the caller thread's
-    # Spark local properties — job groups/descriptions, scheduler
-    # pool, job tags — so setJobGroup/cancelJobGroup does not scope
-    # these pre-flight jobs, and a failed future's siblings run to
-    # completion before the exception surfaces. A harness that needs
-    # cancellation scoping should set the properties inside a submit
-    # wrapper (sc.setLocalProperty per worker).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        edge_futs = {
-            _label(a, b): pool.submit(
-                estimate_join_rows, tables[a], tables[b], k
-            )
-            for a, b, k in edges
-        }
-        count_futs = {t: pool.submit(df.count) for t, df in tables.items()}
-        edge_rows = {lbl: f.result() for lbl, f in edge_futs.items()}
-        n_rows = {t: int(f.result()) for t, f in count_futs.items()}
+    # they run CONCURRENTLY (guide §2.6 "overlap independent jobs"):
+    # Spark's scheduler interleaves their tasks, so the pre-flight wall
+    # clock is ~max instead of sum. Decisions are unchanged: the same
+    # exact statistics arrive, just sooner.
+    spark = next(iter(tables.values())).sparkSession
+    stats = parallel_actions(
+        spark,
+        [partial(estimate_join_rows, tables[a], tables[b], k) for a, b, k in edges]
+        + [df.count for df in tables.values()],
+    )
+    edge_rows = {_label(a, b): n for (a, b, _k), n in zip(edges, stats)}
+    n_rows = {t: int(n) for t, n in zip(tables, stats[len(edges):])}
 
     step_decisions: list = []
 

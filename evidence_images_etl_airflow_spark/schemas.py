@@ -159,14 +159,6 @@ REGISTRY: dict[str, T.StructType] = {
 }
 
 
-def ddl_for(table: str) -> str:
-    """Spark-SQL DDL string for a registered target — the analog of the
-    reference's CREATE TABLE IF NOT EXISTS tasks (K4)."""
-    schema = REGISTRY[table]
-    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
-    return f"CREATE TABLE IF NOT EXISTS {table} ({cols}) USING parquet"
-
-
 # --- schema evolution (r10) -------------------------------------------------
 # Safe-widening rules, Iceberg's evolution matrix: int family widens up,
 # float->double, decimal grows precision at FIXED scale. Nothing lossy

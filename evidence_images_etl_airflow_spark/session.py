@@ -20,7 +20,10 @@ tests and scales to a multi-executor cluster unchanged:
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -62,3 +65,21 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def parallel_actions(spark: SparkSession, thunks: list[Callable[[], Any]]) -> list:
+    """Run independent Spark actions concurrently; results in input order.
+
+    The one thread pool in the package. Pre-flight statistics are small
+    independent jobs, so submitting them together lets the scheduler
+    interleave their tasks: wall clock ~max instead of sum. Each thunk
+    runs with the caller's Spark local properties (job group and
+    description, scheduler pool, tags), so ``cancelJobGroup`` reaches
+    its jobs and they are attributed to the caller's query; a nested
+    call copies what the outer one set. The first exception, in input
+    order, propagates once every thunk has finished.
+    """
+    keep_context = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
+        futures = [pool.submit(keep_context(t)) for t in thunks]
+        return [f.result() for f in futures]

@@ -171,17 +171,6 @@ def cluster_by_range(
     )
 
 
-def zorder_value(c1, c2, bits: int = 12):
-    """Morton (z-order) interleave of two pre-scaled integer columns —
-    delegates to the shared curve in `functions/zorder.py`
-    (`interleave_bits`), which also carries the bit-identical SQL
-    expansion used by the differential oracle. Pure Catalyst bit
-    arithmetic, no UDF."""
-    from evidence_images_etl_airflow_spark.functions.zorder import interleave_bits
-
-    return interleave_bits(c1, c2, bits)
-
-
 def cluster_by_zorder(
     df: DataFrame,
     path: str,

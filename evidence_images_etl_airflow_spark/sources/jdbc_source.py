@@ -47,12 +47,3 @@ def read_jdbc_query(
             .option("numPartitions", str(num_partitions or 8))
         )
     return reader.load()
-
-
-def image_urls_query() -> str:
-    """The reference's enrichment read (add_image_data.py:54-64):
-    5 columns off the join view, ready to push down as a subquery."""
-    return (
-        "SELECT session_date, outlet_code, subscenetype, "
-        "first_image_name, first_image_url FROM public.image_urls"
-    )

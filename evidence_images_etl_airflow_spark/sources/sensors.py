@@ -12,9 +12,6 @@ from __future__ import annotations
 import glob as _glob
 import time
 
-from pyspark.sql import SparkSession
-from pyspark.sql.streaming import DataStreamReader
-
 
 def await_files(pattern: str, timeout_s: float = 60.0, poke_interval_s: float = 1.0) -> list[str]:
     """Blocking sensor: poll a glob until it matches or the timeout
@@ -29,10 +26,3 @@ def await_files(pattern: str, timeout_s: float = 60.0, poke_interval_s: float = 
         if time.monotonic() >= deadline:
             raise TimeoutError(f"no files matched {pattern!r} within {timeout_s}s")
         time.sleep(poke_interval_s)
-
-
-def stream_reader(spark: SparkSession, schema, fmt: str = "parquet") -> DataStreamReader:
-    """File-source stream reader; pair with
-    ``.load(path)`` then ``writeStream.trigger(availableNow=True)`` for
-    the ingest-what-arrived pattern (see streaming.file_stream)."""
-    return spark.readStream.format(fmt).schema(schema)

@@ -123,6 +123,7 @@ from evidence_images_etl_airflow_spark.operators.upsert import (
     keyed_update,
     merge_upsert,
 )
+from evidence_images_etl_airflow_spark.session import parallel_actions
 
 
 @dataclass
@@ -9929,25 +9930,20 @@ def join_autoplan_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them CONCURRENTLY (guide §2.6) overlaps those jobs: ~max instead
     # of sum of the three pre-flights. Same statistics, same decisions,
     # same rows.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fa = pool.submit(
-            _case,
+    a, b, c = parallel_actions(spark, [
+        lambda: _case(
             "dim_broadcast",
             orders.select(F.col("o_custkey").alias("k"), "o_orderkey"),
             customer.select(F.col("c_custkey").alias("k"), "c_acctbal"),
             2000,
-        )
-        fb = pool.submit(
-            _case,
+        ),
+        lambda: _case(
             "fact_fact_uniform",
             li.select(F.col("l_orderkey").alias("k"), "l_linenumber"),
             orders.select(F.col("o_orderkey").alias("k"), "o_totalprice"),
             1000,
-        )
-        fc = pool.submit(
-            _case,
+        ),
+        lambda: _case(
             "fact_hot_salted",
             li.select(
                 F.when(F.col("l_suppkey") % 4 == 0, F.col("l_suppkey"))
@@ -9959,8 +9955,8 @@ def join_autoplan_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             supplier.select(F.col("s_suppkey").alias("k"), "s_name"),
             5,
-        )
-        a, b, c = fa.result(), fb.result(), fc.result()
+        ),
+    ])
     return a.unionByName(b).unionByName(c).orderBy("case_name")
 
 

@@ -26,6 +26,32 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def jobs_in_group(spark):
+    """``run(group, fn)`` calls ``fn()`` under job group ``group`` and
+    returns ``(started, grouped)``: the ids of every job started during
+    the call, and the ids Spark files under ``group``."""
+    sc = spark.sparkContext
+    ssc = sc._jsc.sc()
+
+    def newest_job() -> int:
+        ssc.listenerBus().waitUntilEmpty()
+        jobs = ssc.statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    def run(group: str, fn) -> tuple[set[int], set[int]]:
+        last = newest_job()
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        started = set(range(last + 1, newest_job() + 1))
+        return started, set(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 def _ts(s: str | None):
     return dt.datetime.fromisoformat(s) if s else None
 

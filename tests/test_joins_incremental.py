@@ -247,6 +247,28 @@ def test_plan_join_chain_orders_by_estimates(spark):
     assert plain.exceptAll(joined).count() == 0
 
 
+def test_plan_join_chain_preflight_runs_in_callers_job_group(spark, jobs_in_group):
+    """The concurrent edge pricings and row counts of a 3-table chain
+    all run in the caller's job group."""
+    from evidence_images_etl_airflow_spark.operators.joins import (
+        plan_join_chain,
+    )
+
+    fact = spark.range(1000).select((F.col("id") % 10).alias("k1"))
+    bridge = spark.range(10).select(
+        F.col("id").alias("k1"), (F.col("id") % 2).alias("k2")
+    )
+    dim = spark.range(2).select(F.col("id").alias("k2"))
+    started, grouped = jobs_in_group(
+        "preflight-chain",
+        lambda: plan_join_chain(
+            {"fact": fact, "bridge": bridge, "dim": dim},
+            [("fact", "bridge", "k1"), ("bridge", "dim", "k2")],
+        ),
+    )
+    assert started and started <= grouped
+
+
 def test_plan_join_chain_validates_shape(spark):
     import pytest as _pt
     from pyspark.sql import functions as F

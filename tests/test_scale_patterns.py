@@ -578,6 +578,109 @@ def test_plan_equi_join_lazy_stats_skips_big_side(spark):
     assert j2.count() == 50
 
 
+def test_plan_equi_join_preflight_runs_in_callers_job_group(spark, jobs_in_group):
+    """Both sides' pre-flight statistics run concurrently, and every job
+    they start carries the caller's job group."""
+    from evidence_images_etl_airflow_spark.operators.skew import plan_equi_join
+
+    big = spark.range(10_000).select(F.col("id").alias("k"), (F.col("id") % 9).alias("v"))
+    dim = spark.range(50).select(F.col("id").alias("k"))
+    started, grouped = jobs_in_group(
+        "preflight-equi",
+        lambda: plan_equi_join(big, dim, ["k"], broadcast_max_rows=10, lazy_stats=False),
+    )
+    assert started and started <= grouped
+
+
+def test_cancel_job_group_stops_plan_equi_join_preflight(spark):
+    """cancelJobGroup reaches the planner's concurrent pre-flight jobs:
+    once both sides' statistics jobs are in the caller's group, a cancel
+    makes the call raise at once instead of running on for the ~10 s
+    each slow side needs."""
+    import threading
+    import time
+
+    from py4j.protocol import Py4JJavaError
+
+    from evidence_images_etl_airflow_spark.operators.skew import plan_equi_join
+
+    @F.udf("bigint")
+    def slow_key(i):
+        time.sleep(5)
+        return i
+
+    left, right = (
+        spark.range(0, 4, 1, 2).select(slow_key("id").alias("k"), F.lit(s).alias(s))
+        for s in ("l", "r")
+    )
+    sc, group, errors = spark.sparkContext, "cancel-preflight", []
+
+    def call():
+        sc.setJobGroup(group, group, interruptOnCancel=True)
+        try:
+            plan_equi_join(left, right, ["k"], broadcast_max_rows=1)
+        except Py4JJavaError as e:  # the cancelled job's SparkException
+            errors.append(e)
+
+    t = threading.Thread(target=call)
+    t.start()
+    # each side's first pre-flight job is the slow one
+    while t.is_alive() and len(sc.statusTracker().getJobIdsForGroup(group)) < 2:
+        time.sleep(0.05)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2, "pre-flight jobs ran outside the group"
+    t0 = time.monotonic()
+    sc.cancelJobGroup(group)
+    t.join(timeout=30)
+    assert not t.is_alive() and errors
+    assert time.monotonic() - t0 < 5
+
+
+def test_parallel_actions_order_nesting_and_errors(spark, jobs_in_group):
+    """Results come back in input order; a nested call keeps the outer
+    caller's job group; the first failure in input order propagates."""
+    from evidence_images_etl_airflow_spark.session import parallel_actions
+
+    def count(n):
+        return lambda: spark.range(n).count()
+
+    def nested():
+        return parallel_actions(spark, [count(3), count(4)])
+
+    out = []
+    started, grouped = jobs_in_group(
+        "nested-actions",
+        lambda: out.extend(parallel_actions(spark, [count(1), nested, count(2)])),
+    )
+    assert out == [1, [3, 4], 2]
+    assert started and started <= grouped
+
+    def fail(msg):
+        def thunk():
+            raise ValueError(msg)
+        return thunk
+
+    with pytest.raises(ValueError, match="first"):
+        parallel_actions(spark, [count(1), fail("first"), fail("second")])
+
+
+def test_thread_pools_only_in_session_helper():
+    """Concurrent actions go through session.parallel_actions, which
+    keeps the caller's job group; a bare pool would drop it."""
+    import pathlib
+
+    import evidence_images_etl_airflow_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}: {needle}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "session.py"
+        for needle in ("concurrent.futures", "ThreadPoolExecutor", "threading.Thread")
+        if needle in path.read_text()
+    ]
+    assert not offenders
+
+
 def test_ep4_corpus_semijoin_is_autoplanned(spark):
     """r11 dogfood assertion: ep4's curated-corpus semi-join goes
     through plan_equi_join(lazy_stats=True) and the executed plan
