@@ -37,23 +37,16 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Persist, track, and (optionally) eagerly populate with a count()
-    job.
-
-    Default is LAZY: the round-5 A/B at sf0.1 (tools/ab_materialize.py,
-    min-of-5 per mode on a quiet machine) measured lazy persist faster
-    on every caller — dedup_minhash_lsh 1.19s vs 1.48s,
-    curation_lm_perplexity 0.86s vs 1.16s — because the eager count()
-    adds one extra job per call site while Spark's cache-population
-    locking already keeps concurrent branch reads from duplicating the
-    work wholesale. Pass ``eager=True`` only when a measured race on a
-    specific multi-branch plan justifies the extra materialization job
-    (the round-4 ~4x shingle-race measurement did not reproduce)."""
-    df = df.persist()
-    if eager:
-        df.count()
-    return track(df)
+def materialize(df: DataFrame) -> DataFrame:
+    """Persist and track. LAZY: the first downstream job populates the
+    cache and later branches read it. The round-5 A/B at sf0.1 (min-of-5
+    per mode on a quiet machine) measured lazy persist faster than an
+    eager count() on every caller — dedup_minhash_lsh 1.19s vs 1.48s,
+    curation_lm_perplexity 0.86s vs 1.16s — because the count() adds one
+    job per call site while Spark's cache-population locking already
+    keeps concurrent branch reads from duplicating the work wholesale.
+    The A/B script is ``git show 5871f8d:tools/ab_materialize.py``."""
+    return track(df.persist())
 
 
 def live_count() -> int:

@@ -32,18 +32,6 @@ from evidence_images_etl_airflow_spark.functions.vectors import (
 )
 
 
-def _materialized(sh: DataFrame) -> DataFrame:
-    """Persist the shingle/signature table for the multi-branch pair
-    plan. Lazy persist: the first downstream job populates the cache
-    and later branches read it; the round-5 sf0.1 A/B (min-of-5,
-    tools/ab_materialize.py) measured lazy ~20% faster than an eager
-    count() here — the extra materialization job cost more than any
-    branch-race duplication. Tracked in ``caching`` so session owners
-    can release between queries (the registry wrapper does this
-    automatically)."""
-    return caching.materialize(sh)
-
-
 # --- exact -------------------------------------------------------------------
 def dedup_exact(
     df: DataFrame,
@@ -162,7 +150,7 @@ def _shingle_pair_stats(
     # rewrite pays an ObjectHashAggregate that carries id arrays
     # through its partials. The idiom wins only where it REMOVES an
     # exchange chain, not where it replaces a broadcast join.
-    sh = _materialized(sh)
+    sh = caching.materialize(sh)
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -364,7 +352,7 @@ def prefix_filter_jaccard_pairs(
     # measurement is a whole extra corpus pass; with it, the stats agg
     # is the action that POPULATES the cache the later stages read
     # (the minhash_lsh_pairs idiom), so the measurement is ~free.
-    sh = _materialized(sh)
+    sh = caching.materialize(sh)
     n_parts = (
         None
         if shuffle_target_bytes is None
@@ -403,7 +391,7 @@ def prefix_filter_jaccard_pairs(
         )
     )
     # feeds both prefix-join sides and both verify joins
-    arr = _materialized(arr)
+    arr = caching.materialize(arr)
     # prefix length |x| - ceil(t*|x|) + 1, computed EXACTLY: the
     # threshold is recovered as a 9dp decimal (any human threshold is
     # exact there) and decimal x int products never wobble — unlike
@@ -608,7 +596,7 @@ def winnowing_pairs(
     # quiet-window slower (old min 3.5 s vs new 4.0-4.6 s interleaved
     # at sf0.1) — same ObjectHashAggregate-vs-broadcast-join economics
     # as the shingle candidate phase (see _shingle_pair_stats).
-    fps = _materialized(
+    fps = caching.materialize(
         winnowing_fingerprints(df, id_col, text_col, k, w)
         .select("id", "fp")
         .distinct()
@@ -706,7 +694,7 @@ def minhash_lsh_pairs(
     rows = num_hashes // bands
     # reused by signatures, both verify join sides, and sizes: persist
     # (with the base hash, so md5 runs once per shingle row, ever)
-    sh = _materialized(
+    sh = caching.materialize(
         _doc_shingles(df, id_col, text_col, shingle_n).withColumn(
             "hp", _base_hash(F.col("shingle"))
         )
@@ -739,7 +727,7 @@ def minhash_lsh_pairs(
         shp = sh.repartition(n_parts, "id")
     # the band self-join reads the signature table from BOTH sides;
     # materializing the O(docs)-row table caps the k-hash agg at one pass
-    sig = _materialized(shp.groupBy("id").agg(*_sig_aggs(num_hashes)))
+    sig = caching.materialize(shp.groupBy("id").agg(*_sig_aggs(num_hashes)))
     banded = _band_keys(sig, num_hashes, bands)
     # The band self-join STAYS a join (r16 A/B, measured): the banded
     # table is O(docs x bands) — small enough that AQE broadcasts one
@@ -780,7 +768,7 @@ def minhash_lsh_pairs(
     # bit-for-bit unchanged. Per-doc array length is |distinct
     # shingles| ~ doc tokens, the bound every per-doc-array op in this
     # module already carries.
-    arrs = _materialized(
+    arrs = caching.materialize(
         shp.groupBy("id").agg(F.collect_set("shingle").alias("__shs"))
     )
     return (
@@ -841,8 +829,8 @@ def plan_pair_enumeration(
     loop, not per batch.
 
     The routing rule it encodes is the r15 two-corpus measurement
-    (tools/ab_routing_pairheavy.py, fresh-JVM interleaved medians, 3
-    reps, identical J≥0.6 spec): candidate-dominated corpus
+    (``git show 5871f8d:tools/ab_routing_pairheavy.py``, fresh-JVM
+    interleaved medians, 3 reps, identical J≥0.6 spec): candidate-dominated corpus
     (sf100x_de, 54.6 pairs/doc) — minhash 120.3 s vs prefix 245.2 s
     at IDENTICAL output (recall exactly 1.0: high-J duplicates hit
     every band, the exact verify emits precisely the qualifying set);
@@ -979,7 +967,8 @@ def connected_components(
     Each round is a bounded number of shuffles, all JVM-side;
     ``localCheckpoint`` truncates the plan so lineage doesn't grow
     with iterations. ``last_cc_rounds`` reports the rounds the last
-    call used.
+    call used. Raises ``RuntimeError`` when ``max_iter`` rounds end
+    before convergence: the labels would be partial clusters.
     """
     if algorithm == "two_phase":
         return _cc_two_phase(pairs, src, dst, max_iter)
@@ -1020,7 +1009,12 @@ def connected_components(
             last_cc_rounds = i + 1
             break
     else:
-        last_cc_rounds = max_iter
+        edges.unpersist()
+        raise RuntimeError(
+            f"label_prop connected components did not converge in {max_iter} "
+            "rounds (one round per hop of the deepest component); use "
+            'algorithm="two_phase", which needs O(log diameter) rounds'
+        )
     edges.unpersist()
     return labels.select("node", F.col("lbl").alias("component"))
 
@@ -1070,7 +1064,6 @@ def _cc_two_phase(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    last_cc_rounds = max_iter
     for i in range(max_iter):
         # symmetrize once per round: both endpoints need Γ(u)
         nb = edges.unionByName(
@@ -1120,6 +1113,12 @@ def _cc_two_phase(
         if stable:
             last_cc_rounds = i + 1
             break
+    else:
+        raise RuntimeError(
+            f"two_phase connected components did not converge in {max_iter} "
+            "rounds (about log2 of the deepest component's diameter are "
+            "needed); raise max_iter"
+        )
     # star edges are (member, root); roots label themselves
     return (
         edges.select(F.col("a").alias("node"), F.col("b").alias("component"))
@@ -1170,7 +1169,7 @@ def simhash_near_pairs(
     """Near-dup pairs (id_a < id_b, hamming <= max_hamming) over 64-bit
     SimHashes — the pigeonhole block join (see hamming_near_pairs, the
     generic engine it shares with multimodal perceptual hashing)."""
-    sig = _materialized(simhash64(df, id_col, text_col))
+    sig = caching.materialize(simhash64(df, id_col, text_col))
     return hamming_near_pairs(
         sig, "id", "simhash", max_hamming=max_hamming, blocks=blocks
     )
@@ -1451,7 +1450,7 @@ def minhash_lsh_against_store(
     nb = minhash_band_store(
         new_docs, id_col, text_col, num_hashes, bands, shingle_n
     )
-    nb = _materialized(nb)
+    nb = caching.materialize(nb)
     collided = (
         nb.join(band_store.select("band", "key").distinct(), ["band", "key"], "leftsemi")
         .select("id")

@@ -41,9 +41,7 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
-    assume_distinct: bool = False,
-    nodes_from_src: bool = False,
-    complete_indegree: bool = False,
+    symmetric: bool = False,
 ) -> DataFrame:
     """PageRank over a directed edge list ``(src, dst)`` — pass both
     directions for an undirected graph. Every node is assumed to have
@@ -52,44 +50,26 @@ def pagerank(
     destinations, and each iteration left-joins contributions onto the
     full node set, so a node with no in-edges stays in the result at
     the base rank (1-d)/N instead of silently disappearing after the
-    first round. Pass ``assume_distinct=True`` when the caller already
-    deduplicated the edge list — skipping the redundant full-shuffle
-    distinct is the single biggest saving on a big graph — and
-    ``nodes_from_src=True`` when every node is KNOWN to appear as a
-    source (always true for symmetric/undirected edge lists): the node
-    set then falls out of the out-degree aggregation for free instead
-    of costing a second full-edge distinct. Pass
-    ``complete_indegree=True`` when every node is KNOWN to appear as a
-    destination (again always true for symmetric edge lists): the
-    contribution aggregation then already covers the full node set, so
-    each iteration is ONE join + agg instead of two — the per-round
-    left-join of contributions back onto the node frame (and the extra
-    broadcast it forces) exists only to re-seat nodes with no
-    in-edges at base rank, which a symmetric graph cannot have.
-    Numerically identical when the precondition holds: the same
-    groupBy produces the same sums; only the no-op join is removed
-    (r16 optimization — halves the per-iteration job count).
+    first round.
 
-    AUDIT THE THREE PRECONDITION FLAGS TOGETHER (r16 ADVICE): each is
-    an unchecked caller promise, and they fail differently when
-    violated — ``assume_distinct`` double-counts duplicate edges,
-    ``nodes_from_src`` drops nodes that never appear as a source, and
-    ``complete_indegree`` silently drops any ZERO-IN-EDGE node from
-    the rank vector after round 1 while N still counts it (ranks then
-    no longer sum to 1). A symmetric/undirected edge list satisfies
-    all three at once; for anything else, leave the flags off rather
-    than reason about them separately.
+    ``symmetric=True`` promises, unchecked, that the list is distinct
+    and holds both directions of every edge. The operator then skips
+    the edge distinct, takes the node set from the out-degree
+    aggregation, and drops the per-round left join back onto the node
+    set (a symmetric graph has no node without in-edges): one join +
+    agg per iteration instead of two, with the same sums (r16).
+
     Returns ``(node, rank)`` with the uniform 1/N start and
     ``iterations`` fixed power steps."""
     edges = edges.select("src", "dst")
-    if not assume_distinct:
+    if not symmetric:
         edges = edges.distinct()
     edges = caching.materialize(edges)
     deg = caching.materialize(
         edges.groupBy("src").agg(F.count("*").alias("__deg"))
     )
-    if nodes_from_src:
-        # symmetric graphs: src set == node set, one agg, no extra pass
+    if symmetric:
+        # src set == node set: one agg, no extra pass
         nodes = deg.select(F.col("src").alias("node"))
     else:
         nodes = (
@@ -145,8 +125,8 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("__w")).alias("__in"))
         )
-        if complete_indegree:
-            # dst set == node set (symmetric list): the left-join back
+        if symmetric:
+            # dst set == node set: the left-join back
             # onto nodes is the identity — skip it and the broadcast
             # it would force. Same summands, same expression, same
             # rows; one join + one broadcast fewer per round.
@@ -246,13 +226,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     # orientation already bounds at O(sqrt(m)); the intersections run
     # inside codegen with no wedge ever shuffled. Measured 9.2 s ->
     # 4.3 s on the 1.2M-edge / 148M-wedge sf0.1 graph (SCALING.md r9).
-    # persisted: both wedge legs read the SAME adjacency table, and
-    # without it Spark computes the collect_set aggregation (and its
-    # exchange) twice — once per broadcast build side (r17; interleaved
-    # A/B med 3.84 -> 2.69 s, min 3.13 -> 2.61 s at sf0.1)
-    adj = caching.materialize(
-        o.groupBy(F.col("s").alias("n")).agg(F.collect_set("t").alias("nbrs"))
-    )
+    adj = o.groupBy(F.col("s").alias("n")).agg(F.collect_set("t").alias("nbrs"))
     # 1-row aggregate, composed LAZILY via a broadcast cross join (the
     # basket_type_affinity idiom) instead of a driver .first() at
     # construction time: the old shape EXECUTED the whole heavy subtree

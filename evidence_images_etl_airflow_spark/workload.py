@@ -7391,9 +7391,7 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union of two selects would compute the 6M-row join + distinct
     # subtree twice when the edge cache populates. Both directions of
     # a distinct pair set stay distinct (the c/s namespaces are
-    # disjoint), so pagerank can skip its own distinct; and since
-    # every node appears as a source in a symmetric list, the node
-    # set falls out of the degree agg (nodes_from_src).
+    # disjoint), so the list is symmetric in pagerank's sense.
     edges = pairs.select(
         F.explode(
             F.array(
@@ -7402,15 +7400,7 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    pr = pagerank(
-        edges, iterations=5, damping=0.85, assume_distinct=True,
-        nodes_from_src=True,
-        # symmetric list: every node also appears as a destination, so
-        # the per-round left-join back onto the node frame is the
-        # identity — the operator skips it (one join + one broadcast
-        # per iteration instead of two; r16, guide §2.4)
-        complete_indegree=True,
-    )
+    pr = pagerank(edges, iterations=5, damping=0.85, symmetric=True)
     return pr.select(
         F.when(
             F.col("node") % 2 == 0,

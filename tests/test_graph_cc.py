@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from evidence_images_etl_airflow_spark.operators import dedup
@@ -61,6 +62,22 @@ def test_round_counts_diverge_on_deep_component(spark):
     assert lp_rounds >= 31  # one hop per round along the path
 
 
+# a 64-node path: label prop needs 63 hops, two-phase about 7 rounds
+_PATH64 = [(i, i + 1) for i in range(63)]
+
+
+def test_label_prop_raises_when_rounds_run_out(spark):
+    # used to return the 10-round partial labels: 54 "components"
+    with pytest.raises(RuntimeError, match=r'10 rounds.*algorithm="two_phase"'):
+        _components(spark, _PATH64, "label_prop", max_iter=10)
+
+
+def test_two_phase_raises_when_rounds_run_out(spark):
+    # used to return 119 (node, component) rows for 64 nodes
+    with pytest.raises(RuntimeError, match="3 rounds"):
+        _components(spark, _PATH64, "two_phase", max_iter=3)
+
+
 def test_two_phase_multiple_components_and_self_pairs(spark):
     edges = [(1, 2), (2, 3), (10, 11), (20, 20), (30, 31), (31, 30)]
     tp = _components(spark, edges, "two_phase")
@@ -93,6 +110,21 @@ def test_pagerank_uniform_cycle(spark):
     assert len(ranks) == 4
     for r in ranks:
         assert abs(r - 0.25) < 1e-9
+
+
+def test_pagerank_symmetric_matches_default_path(spark):
+    # irregular undirected graph, listed once per direction
+    rng = random.Random(11)
+    und = {tuple(sorted(rng.sample(range(40), 2))) for _ in range(90)}
+    und |= {(i, i + 1) for i in range(39)}  # connected: every node has edges
+    edges = spark.createDataFrame(
+        [e for a, b in und for e in ((a, b), (b, a))], "src long, dst long"
+    )
+    fast = {r.node: r.rank for r in pagerank(edges, symmetric=True).collect()}
+    slow = {r.node: r.rank for r in pagerank(edges).collect()}
+    assert set(fast) == set(slow) == set(range(40))
+    assert max(abs(fast[n] - slow[n]) for n in slow) < 1e-12
+    assert abs(sum(fast.values()) - 1.0) < 1e-12
 
 
 def test_triangle_count_hand_crafted(spark):
