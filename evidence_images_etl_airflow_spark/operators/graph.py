@@ -98,15 +98,13 @@ def pagerank(
     # reverted.)
     dv = F.broadcast(deg) if small else deg
     # Hash-partition the weighted cache by the key each ITERATION needs
-    # (r17, guide §2.4 "two operations keyed the same way share one
-    # exchange"): one exchange paid at build time removes the
-    # per-iteration exchange from every power step.
+    # (two operations keyed the same way share one exchange): one
+    # exchange paid at build time removes the per-iteration exchange
+    # from every power step.
     # - small graphs (rank vector broadcasts): the only shuffle per
     #   iteration is the contribution groupBy(dst) — a dst-partitioned
     #   cache satisfies its ClusteredDistribution, so each iteration is
     #   a single map stage (scan -> broadcast join -> complete agg).
-    #   Interleaved A/B at sf0.1 (1.17M edges, 16k nodes, 5 iters):
-    #   med 3.50 -> 2.19 s, min 3.25 -> 2.04 s, 29 -> 25 jobs.
     # - big graphs (rank vector shuffles): the rank join itself is the
     #   per-iteration shuffle — a src-partitioned cache keeps the EDGE
     #   list out of it (only the |nodes|-row rank vector moves; the
@@ -146,15 +144,13 @@ def pagerank(
                     ).alias("rank"),
                 )
             )
-        # Truncate lineage every round. localCheckpoint truncates the
-        # LOGICAL plan in both modes (the 16.7s-vs-6.5s r05 measurement
-        # was persist-only state, whose plan grows two joins per round
-        # — not lazy checkpoints); LAZY mode additionally folds each
-        # round's materialization job into the next round's broadcast
-        # build (r17, guide §2.6: fewer driver round-trips — measured
-        # 25 -> 20 jobs, med 2.19 -> 2.16 s on top of the partitioned
-        # cache). Checkpoint blocks are freed by the registry wrapper's
-        # hard release at the query boundary.
+        # Truncate lineage every round: without it the plan grows two
+        # joins per round. localCheckpoint truncates the LOGICAL plan in
+        # both modes; LAZY mode additionally folds each round's
+        # materialization job into the next round's broadcast build,
+        # one driver round-trip fewer per round. Checkpoint blocks are
+        # freed by the registry wrapper's hard release at the query
+        # boundary.
         ranks = ranks.localCheckpoint(eager=False)
     return ranks
 

@@ -27,10 +27,17 @@ half of Delta/Iceberg ``OPTIMIZE``):
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from evidence_images_etl_airflow_spark.sinks.writers import (
+    hadoop_fs,
+    read_bytes,
+    write_bytes_atomic,
+)
 
 
 def file_inventory(spark: SparkSession, path: str) -> DataFrame:
@@ -98,60 +105,8 @@ def compaction_summary(
     )
 
 
-def _fs_for(spark: SparkSession, path: str):
-    """(jvm Path class, FileSystem) for ``path`` — the storage-agnostic
-    Hadoop handles every swap/recovery helper below shares."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hadoop_path = jvm.org.apache.hadoop.fs.Path
-    fs = hadoop_path(path).getFileSystem(jsc.hadoopConfiguration())
-    return hadoop_path, fs
-
-
 def _manifest_path(path: str) -> str:
     return f"{path.rstrip('/')}__compact_manifest.json"
-
-
-def _write_manifest(spark, fs, hadoop_path, path: str, manifest: dict) -> None:
-    """Write the commit manifest ATOMICALLY: stream to a ``.tmp`` name,
-    then ``fs.rename`` into place, so a complete manifest is the commit
-    point (ADVICE r11). A crash mid-write leaves only the tmp file —
-    never a truncated JSON at the final path that would wedge
-    :func:`recover_compaction` on every later call."""
-    import json
-
-    final = hadoop_path(_manifest_path(path))
-    tmp = hadoop_path(_manifest_path(path) + ".tmp")
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps(manifest).encode("utf-8")))
-    out.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"compaction manifest rename failed: {_manifest_path(path)}")
-
-
-def _read_manifest(spark, fs, hadoop_path, path: str) -> dict | None:
-    import json
-
-    mp = hadoop_path(_manifest_path(path))
-    if not fs.exists(mp):
-        return None
-    stream = fs.open(mp)
-    try:
-        jvm = spark.sparkContext._jvm
-        data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-    finally:
-        stream.close()
-    try:
-        return json.loads(bytes(data).decode("utf-8"))
-    except (ValueError, UnicodeDecodeError):
-        # Defense-in-depth behind the atomic tmp+rename write: an
-        # unparseable manifest can only be pre-commit garbage (nothing
-        # is moved or deleted before a complete manifest exists), so
-        # deleting it is safe and un-wedges recovery (ADVICE r11).
-        fs.delete(mp, False)
-        return None
 
 
 def recover_compaction(spark: SparkSession, path: str) -> dict:
@@ -164,12 +119,21 @@ def recover_compaction(spark: SparkSession, path: str) -> dict:
     ordering means the crash window holds transient DUPLICATES, never
     missing rows; this replay removes the duplicates mechanically.
     Returns ``{"moves_replayed", "deletes_replayed"}``."""
-    hadoop_path, fs = _fs_for(spark, path)
+    hadoop_path, fs = hadoop_fs(spark, path)
     stray_tmp = hadoop_path(_manifest_path(path) + ".tmp")
     if fs.exists(stray_tmp):
         fs.delete(stray_tmp, False)  # pre-commit garbage from a crash mid-write
-    manifest = _read_manifest(spark, fs, hadoop_path, path)
-    if manifest is None:
+    data = read_bytes(spark, _manifest_path(path))
+    if data is None:
+        return {"moves_replayed": 0, "deletes_replayed": 0}
+    try:
+        manifest = json.loads(data.decode("utf-8"))
+    except (ValueError, UnicodeDecodeError):
+        # Defense-in-depth behind the atomic tmp+rename write: an
+        # unparseable manifest can only be pre-commit garbage (nothing
+        # is moved or deleted before a complete manifest exists), so
+        # deleting it is safe and un-wedges recovery (ADVICE r11).
+        fs.delete(hadoop_path(_manifest_path(path)), False)
         return {"moves_replayed": 0, "deletes_replayed": 0}
     moves = deletes = 0
     for mv in manifest["moves"]:
@@ -207,8 +171,8 @@ def execute_compaction(
     """INCREMENTAL compaction: rewrite only the merge groups that
     actually contain >= 2 files, leaving already-compact files
     byte-untouched — the property that makes OPTIMIZE affordable on a
-    100 TB table (``sinks.writers.compact_parquet`` rewrites the whole
-    dataset; this touches only the small-file tail). Work is bounded
+    100 TB table (a whole-table rewrite would decode every file; this
+    touches only the small-file tail). Work is bounded
     per run by ``max_groups`` (largest file-count groups first), the
     standard incremental-OPTIMIZE batching, which also bounds the
     driver-side file list this function materializes (every table
@@ -308,7 +272,7 @@ def execute_compaction(
         .parquet(tmp)
     )
 
-    hadoop_path, fs = _fs_for(spark, path)
+    hadoop_path, fs = hadoop_fs(spark, path)
     # Enumerate the full move list BEFORE touching the table, then
     # persist it as the commit manifest: after this point the swap is
     # replayable from the manifest alone (recover_compaction), so a
@@ -329,7 +293,12 @@ def execute_compaction(
             }
         )
     manifest = {"tmp_dir": tmp, "moves": moves, "deletes": list(paths)}
-    _write_manifest(spark, fs, hadoop_path, path, manifest)
+    # the complete manifest is the commit point: written to a .tmp name
+    # and renamed into place, so a crash mid-write leaves no truncated
+    # JSON that would wedge recover_compaction (ADVICE r11)
+    write_bytes_atomic(
+        spark, _manifest_path(path), json.dumps(manifest).encode("utf-8")
+    )
 
     # Rename-first (ADVICE r10): originals stay until every rewritten
     # file has landed, so no crash point loses rows. Hadoop rename
@@ -405,7 +374,7 @@ def maintain_dedup_store(
     each surviving epoch's compaction stats."""
     import re
 
-    hadoop_path, fs = _fs_for(spark, path)
+    hadoop_path, fs = hadoop_fs(spark, path)
     root = hadoop_path(path)
     if not fs.exists(root):
         raise FileNotFoundError(f"no dedup store at {path}")

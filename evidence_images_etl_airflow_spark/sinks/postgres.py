@@ -24,8 +24,9 @@ the pure-code half of that story — type mapping and SQL text — unit
 At scale the write path is: df.write.jdbc appends into an UNLOGGED
 staging table (parallel, one connection per partition), then ONE
 server-side MERGE publishes atomically — the same two-phase shape as
-``sinks.writers.merge_into_parquet``, with the conflict arbitration
-done by the database exactly as the reference does it.
+``sinks.writers.merge_into_parquet`` (merged rows staged, then
+``swap_parquet`` into place), with the conflict arbitration done by
+the database exactly as the reference does it.
 """
 
 from __future__ import annotations

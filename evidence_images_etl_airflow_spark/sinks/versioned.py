@@ -31,47 +31,24 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from evidence_images_etl_airflow_spark.sinks.writers import (
+    hadoop_fs,
+    read_bytes,
+    write_bytes_atomic,
+)
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
 
-
-def _flip_pointer(spark: SparkSession, table: str, tmp_suffix: str, value: int) -> None:
-    """Stage the pointer bytes in a temp file, then rename ONTO
-    ``_LATEST`` with ``Options.Rename.OVERWRITE`` (FileContext) — a
-    single atomic replace, so there is never a moment where the
-    pointer doesn't exist (round-4 ADVICE: the old delete-then-rename
-    had a visible gap that contradicted the reader contract). Falls
-    back to delete+rename only if the filesystem exposes no
-    FileContext (readers are still covered by the current_version
-    max-version fallback)."""
-    jvm, fs = _fs(spark, table)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{table}/_LATEST.tmp.{tmp_suffix}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(str(value).encode("utf-8")))
-    finally:
-        out.close()
-    ptr = jvm.org.apache.hadoop.fs.Path(f"{table}/_LATEST")
-    try:
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            jvm.org.apache.hadoop.fs.Path(table).toUri(), conf
-        )
-        gw = spark.sparkContext._gateway
-        opts = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-        opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        fc.rename(tmp, ptr, opts)
-    except Exception:
-        fs.delete(ptr, False)
-        fs.rename(tmp, ptr)
+def _flip_pointer(spark: SparkSession, table: str, value: int) -> None:
+    """Point ``_LATEST`` at ``value`` with one atomic overwriting rename
+    (``writers.write_bytes_atomic``): readers never see the pointer
+    missing, and a failed rename raises and leaves the previous pointer
+    in place."""
+    write_bytes_atomic(spark, f"{table}/_LATEST", str(value).encode("utf-8"))
 
 
 def list_versions(spark: SparkSession, table: str) -> list[int]:
-    jvm, fs = _fs(spark, table)
-    root = jvm.org.apache.hadoop.fs.Path(table)
+    hadoop_path, fs = hadoop_fs(spark, table)
+    root = hadoop_path(table)
     if not fs.exists(root):
         return []
     out = []
@@ -84,30 +61,15 @@ def list_versions(spark: SparkSession, table: str) -> list[int]:
 
 def current_version(spark: SparkSession, table: str) -> int | None:
     """Resolve the published version. Primary source is the ``_LATEST``
-    pointer; if the pointer is momentarily absent (legacy
-    delete-then-rename writers, or a crash between the fallback's
-    delete and rename), fall back to the newest staged version
-    directory — for a single writer the newest complete ``v=N`` is
-    exactly what the missing pointer was about to say."""
-    jvm, fs = _fs(spark, table)
-    ptr = jvm.org.apache.hadoop.fs.Path(f"{table}/_LATEST")
-    if not fs.exists(ptr):
+    pointer; if the pointer is absent (a table written by an older
+    delete-then-rename writer that crashed between the two steps), fall
+    back to the newest staged version directory — for a single writer
+    the newest complete ``v=N`` is exactly what the missing pointer was
+    about to say."""
+    data = read_bytes(spark, f"{table}/_LATEST")
+    if data is None:
         versions = list_versions(spark, table)
         return versions[-1] if versions else None
-    stream = fs.open(ptr)
-    try:
-        if hasattr(stream, "readAllBytes"):
-            data = bytes(stream.readAllBytes())
-        else:  # byte-at-a-time fallback; pointer files are tiny
-            buf = []
-            while True:
-                b = stream.read()
-                if b < 0:
-                    break
-                buf.append(b)
-            data = bytes(buf)
-    finally:
-        stream.close()
     return int(data.decode("utf-8").strip())
 
 
@@ -125,7 +87,7 @@ def publish(spark: SparkSession, df: DataFrame, table: str) -> int:
     versions = list_versions(spark, table)
     v = (versions[-1] if versions else 0) + 1
     df.write.mode("overwrite").parquet(f"{table}/v={v}")
-    _flip_pointer(spark, table, str(v), v)
+    _flip_pointer(spark, table, v)
     return v
 
 
@@ -145,7 +107,7 @@ def rollback(spark: SparkSession, table: str, version: int) -> None:
     same atomic overwriting rename as publish."""
     if version not in list_versions(spark, table):
         raise ValueError(f"version {version} does not exist under {table}")
-    _flip_pointer(spark, table, f"rb{version}", version)
+    _flip_pointer(spark, table, version)
 
 
 def vacuum(spark: SparkSession, table: str, keep_last: int = 2) -> list[int]:
@@ -155,9 +117,9 @@ def vacuum(spark: SparkSession, table: str, keep_last: int = 2) -> list[int]:
     versions = list_versions(spark, table)
     cur = current_version(spark, table)
     candidates = [v for v in versions[:-keep_last] if v != cur] if keep_last else []
-    jvm, fs = _fs(spark, table)
+    hadoop_path, fs = hadoop_fs(spark, table)
     for v in candidates:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{table}/v={v}"), True)
+        fs.delete(hadoop_path(f"{table}/v={v}"), True)
     return candidates
 
 
@@ -213,10 +175,10 @@ def delete_where(
     if v is None:
         raise FileNotFoundError(f"no published version under {table}")
     vdir = f"{table}/v={v}"
-    jvm, fs = _fs(spark, table)
+    hadoop_path, fs = hadoop_fs(spark, table)
     all_files = [
         st.getPath().toString()
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(vdir))
+        for st in fs.listStatus(hadoop_path(vdir))
         if st.getPath().getName().endswith(".parquet")
     ]
     candidates = all_files
@@ -294,11 +256,12 @@ def delete_where(
     n_kept = kept.count()
     kept.write.mode("overwrite").parquet(new_dir)
     conf = spark.sparkContext._jsc.hadoopConfiguration()
+    file_util = spark.sparkContext._jvm.org.apache.hadoop.fs.FileUtil
     for f in untouched:
-        src = jvm.org.apache.hadoop.fs.Path(f)
-        dst = jvm.org.apache.hadoop.fs.Path(f"{new_dir}/{src.getName()}")
-        jvm.org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, False, True, conf)
-    _flip_pointer(spark, table, f"del{new_v}", new_v)
+        src = hadoop_path(f)
+        dst = hadoop_path(f"{new_dir}/{src.getName()}")
+        file_util.copy(fs, src, fs, dst, False, True, conf)
+    _flip_pointer(spark, table, new_v)
     return {
         "version": new_v,
         "files_rewritten": len(touched),

@@ -73,11 +73,135 @@ def append_parquet(
     writer.parquet(path)
 
 
-def _read_target(spark: SparkSession, path: str, like: DataFrame) -> DataFrame | None:
-    try:
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(Path class, FileSystem)`` for ``path``: the Hadoop handles every
+    listing, rename and delete in the package goes through, so each works
+    on any supported storage scheme (local, HDFS, s3a/abfs), not only the
+    local filesystem ``os``/``shutil`` reach."""
+    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs = hadoop_path(path).getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    )
+    return hadoop_path, fs
+
+
+def read_parquet_target(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read a parquet target, recovering from the ``__backup`` copy an
+    interrupted :func:`swap_parquet` may have left behind. Returns None
+    only when neither the target nor its backup exists (first write);
+    any other read error (a corrupt file, a permission failure)
+    propagates, because treating it as a first write would discard every
+    row the target holds."""
+    hadoop_path, fs = hadoop_fs(spark, path)
+    backup = path.rstrip("/") + "__backup"
+    if fs.exists(hadoop_path(path)):
         return spark.read.parquet(path)
+    if fs.exists(hadoop_path(backup)):
+        # crash window: the old target was renamed aside but the new one
+        # never landed. The backup IS the current target, and the
+        # interrupted write replays against it.
+        return spark.read.parquet(backup)
+    return None
+
+
+def swap_parquet(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Replace the parquet directory ``path`` with ``df``: write a
+    staging directory, rename the target to ``__backup``, rename staging
+    into place, then drop the backup. At every instant at least one
+    complete copy (target or backup) exists, so a crash at any step
+    loses at most the write in flight; :func:`read_parquet_target` reads
+    the backup when the target is missing. ``df`` may read ``path``
+    itself: it is fully written to staging before any rename.
+
+    Hadoop ``FileSystem.rename`` signals failure by returning false,
+    not by raising, so each rename is checked. A failed staging->target
+    rename raises with the backup intact; falling through to delete the
+    backup would leave no complete copy at all."""
+    import uuid
+
+    base = path.rstrip("/")
+    hadoop_path, fs = hadoop_fs(spark, path)
+    target = hadoop_path(path)
+    # Reclaim staging directories a crashed swap leaked: a crash between
+    # the staging write and the renames leaves a uuid-named sibling no
+    # later run would otherwise identify. Best-effort: a listing or
+    # delete failure must not block the write.
+    parent = target.getParent()
+    marker = target.getName() + "__staging_"
+    try:
+        if parent is not None and fs.exists(parent):
+            for st in fs.listStatus(parent):
+                if st.getPath().getName().startswith(marker):
+                    fs.delete(st.getPath(), True)
     except Exception:
-        return None  # first write: target does not exist yet
+        pass
+    staging = f"{base}__staging_{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").parquet(staging)  # materializes BEFORE any rename
+    backup = hadoop_path(base + "__backup")
+    if fs.exists(target):
+        # A live target supersedes any stale backup; only then is the
+        # old backup safe to drop. With the target missing (the recovery
+        # state), the backup is the last complete copy and must stay.
+        if fs.exists(backup):
+            fs.delete(backup, True)
+        if not fs.rename(target, backup):
+            raise IOError(
+                f"parquet swap aborted: rename {path} -> {base}__backup "
+                "returned false; target left in place"
+            )
+    if not fs.rename(hadoop_path(staging), target):
+        raise IOError(
+            f"parquet swap failed: rename {staging} -> {path} returned "
+            "false; last complete copy preserved at "
+            f"{base}__backup (recovered on next read)"
+        )
+    fs.delete(backup, True)
+
+
+def write_bytes_atomic(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write a small file so readers see the old file or the complete new
+    one, never a torn write: stream to ``path + ".tmp"``, then rename
+    onto ``path``. Where the filesystem has a FileContext, the rename
+    overwrites in one atomic step and a failure raises. Only a scheme
+    with no FileContext falls back to delete + rename, and that rename
+    is checked."""
+    sc = spark.sparkContext
+    jfs = sc._jvm.org.apache.hadoop.fs
+    hadoop_path, fs = hadoop_fs(spark, path)
+    final, tmp = hadoop_path(path), hadoop_path(path + ".tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+    try:
+        fc = jfs.FileContext.getFileContext(
+            final.toUri(), sc._jsc.hadoopConfiguration()
+        )
+    except Exception:  # no AbstractFileSystem for this scheme
+        if fs.exists(final):
+            fs.delete(final, False)
+        if not fs.rename(tmp, final):
+            raise IOError(f"rename {path}.tmp -> {path} returned false")
+        return
+    opts = sc._gateway.new_array(jfs.Options.Rename, 1)
+    opts[0] = jfs.Options.Rename.OVERWRITE
+    fc.rename(tmp, final, opts)
+
+
+def read_bytes(spark: SparkSession, path: str) -> bytes | None:
+    """Whole contents of a small file, or None when it does not exist."""
+    hadoop_path, fs = hadoop_fs(spark, path)
+    p = hadoop_path(path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return bytes(
+            spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+        )
+    finally:
+        stream.close()
 
 
 def idempotent_append_parquet(
@@ -89,14 +213,15 @@ def idempotent_append_parquet(
 ) -> int:
     """K1: the conflict-skip load (ON CONFLICT DO NOTHING,
     evidence_images_processing.py:169-171) on a parquet target. Appends
-    only rows whose key is new; returns how many were appended.
+    only rows whose key is new; returns how many were appended. A target
+    that exists but cannot be read raises before anything is appended.
 
     Scale note: only the *keys* of the existing table are read (column
     pruning reaches the scan), so re-runs cost one key-scan + one
     shuffle, not a rewrite. With a Delta/Iceberg target this becomes
     MERGE WHEN NOT MATCHED THEN INSERT with file skipping.
     """
-    existing = _read_target(spark, path, df)
+    existing = read_parquet_target(spark, path)
     if existing is None:
         from evidence_images_etl_airflow_spark.operators.upsert import dedup_first_wins
 
@@ -122,29 +247,14 @@ def merge_into_parquet(
     update_cols: Sequence[str] | None = None,
 ) -> None:
     """K5/J3: staging + MERGE (learn/postgres_op.py:30-68) on a parquet
-    target: read target, full-outer merge, rewrite via a temp directory
-    swap through the Hadoop FileSystem API — the same pattern as
-    ``compact_parquet``, so the swap works on any supported storage
-    scheme (local, HDFS, s3a/abfs), not just the local filesystem a
-    ``shutil`` move can reach. On a table format this is a native MERGE;
-    on raw parquet a rewrite is the only transactional option. Note the
-    delete+rename window is only atomic where the store's rename is
-    (HDFS yes; object stores emulate) — a table format is the real
-    answer for concurrent readers at 100 TB."""
-    import uuid
-
-    target = _read_target(spark, path, source)
-    if target is None:
-        source.write.mode("overwrite").parquet(path)
-        return
-    merged = merge_upsert(target, source, keys, update_cols)
-    tmp = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath)
+    target: read the target, full-outer merge, and replace the target
+    through :func:`swap_parquet`. A first write (no target, no backup)
+    writes ``source`` alone; a target that exists but cannot be read
+    raises with its files untouched. On a table format this is a native
+    MERGE; on raw parquet a rewrite is the only transactional option."""
+    target = read_parquet_target(spark, path)
+    merged = source if target is None else merge_upsert(target, source, keys, update_cols)
+    swap_parquet(spark, merged, path)
 
 
 def cluster_by_range(
@@ -257,40 +367,6 @@ def write_bucketed(
     )
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target_file_bytes)`` files and atomically swap
-    it in; returns the new file count. Streaming sinks and frequent
-    small appends accrete tiny files whose per-file open/footer cost
-    eventually dominates scans — periodic compaction (OPTIMIZE in table
-    formats) restores ~HDFS-block-sized files. Uses the Hadoop
-    FileSystem API, so it works on any supported storage, not just
-    local paths."""
-    import math
-
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    it = fs.listFiles(hpath, True)
-    total = 0
-    while it.hasNext():
-        f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            total += f.getLen()
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = f"{path.rstrip('/')}__compact"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    fs.delete(hpath, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath)
-    return n_files
-
-
 def write_training_shards(
     df: DataFrame,
     path: str,
@@ -344,10 +420,8 @@ def write_training_shards(
         }
     finally:
         df.unpersist()
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
+    hadoop_path, fs = hadoop_fs(spark, path)
+    hpath = hadoop_path(path)
     shards = {}
     it = fs.listStatus(hpath)
     for st in it:
@@ -387,10 +461,11 @@ def write_training_shards(
         manifest["total_tokens"] = int(
             sum(s.get("tokens", 0) for s in shards.values())
         )
-    out = jvm.org.apache.hadoop.fs.Path(path, "_manifest.json")
-    stream = fs.create(out, True)
-    stream.write(bytearray(json.dumps(manifest, indent=1).encode("utf-8")))
-    stream.close()
+    write_bytes_atomic(
+        spark,
+        f"{path.rstrip('/')}/_manifest.json",
+        json.dumps(manifest, indent=1).encode("utf-8"),
+    )
     return manifest
 
 

@@ -32,6 +32,8 @@ from urllib.parse import unquote
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from evidence_images_etl_airflow_spark.sinks.writers import hadoop_fs
+
 
 def build_manifest(
     spark: SparkSession, path: str | list[str], cols: list[str]
@@ -70,12 +72,10 @@ def update_manifest(
     filesystem operation (no data read); matching is by file NAME
     (`input_file_name` URI-encodes, FS listings don't). The stat
     columns must match the original manifest's."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    hadoop_path, fs = hadoop_fs(spark, path)
     listed = {
         st.getPath().getName(): st.getPath().toString()
-        for st in fs.listStatus(hpath)
+        for st in fs.listStatus(hadoop_path(path))
         if st.getPath().getName().endswith(".parquet")
     }
     # one row per file by construction — driver-collectable even at

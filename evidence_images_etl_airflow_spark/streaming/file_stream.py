@@ -14,6 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from evidence_images_etl_airflow_spark.sinks.writers import (
+    hadoop_fs,
+    idempotent_append_parquet,
+    read_parquet_target,
+    swap_parquet,
+)
+
 # Column stamped on every persisted-store row recording the foreachBatch
 # batch id that produced it. foreachBatch is at-least-once: a batch
 # replayed after a failure between the store swap and the checkpoint
@@ -24,32 +31,6 @@ from pyspark.sql import functions as F
 _BATCH_COL = "_last_batch"
 
 
-def _hadoop(sess: SparkSession, path: str):
-    jvm = sess.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sess.sparkContext._jsc.hadoopConfiguration())
-    return jvm, fs, hpath
-
-
-def _read_store(sess: SparkSession, path: str) -> DataFrame | None:
-    """Read a persisted store, recovering from the ``__backup`` copy a
-    crashed swap may have left behind. Returns None only when neither
-    main nor backup exists (first batch); any OTHER read error — a
-    corrupt file, a permission failure — propagates, because silently
-    bootstrapping a fresh store there would discard every accumulated
-    count."""
-    jvm, fs, hpath = _hadoop(sess, path)
-    backup = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__backup")
-    if fs.exists(hpath):
-        return sess.read.parquet(path)
-    if fs.exists(backup):
-        # crash window: old store was renamed aside but the new one
-        # never landed — the backup IS the current store, and the
-        # interrupted batch will replay against it.
-        return sess.read.parquet(path.rstrip("/") + "__backup")
-    return None
-
-
 def _applied_batch(store: DataFrame | None) -> int:
     """Largest foreachBatch batch id already folded into the store
     (-1 when none). Bounded: the store is summary-sized by
@@ -58,63 +39,6 @@ def _applied_batch(store: DataFrame | None) -> int:
         return -1
     v = store.agg(F.max(_BATCH_COL)).first()[0]
     return -1 if v is None else int(v)
-
-
-def _swap_store(sess: SparkSession, df: DataFrame, path: str) -> None:
-    """Replace the store via write-staging -> rename-current-to-backup
-    -> rename-staging-to-current -> drop-backup. Unlike delete-then-
-    rename, at every instant at least one complete copy (current or
-    backup) exists on disk, so a crash at any step loses at most the
-    in-flight batch — which the checkpoint will replay.
-
-    Hadoop ``FileSystem.rename`` signals failure by returning FALSE,
-    not by raising — each rename is checked (r08 ADVICE): a failed
-    staging->current rename used to fall through to deleting the
-    backup (the only remaining complete copy) and then let the
-    foreachBatch checkpoint commit, silently resetting all accumulated
-    state on the next batch. Now it raises with the backup intact."""
-    import uuid
-
-    base = path.rstrip("/")
-    jvm, fs, hpath = _hadoop(sess, path)
-    # Reclaim staging dirs a previous crashed swap leaked (r08 ADVICE):
-    # a crash between the staging write and the renames leaves a
-    # uuid-named sibling no later run would otherwise identify.
-    # Best-effort — a listing/delete failure must not block the batch.
-    parent = hpath.getParent()
-    marker = hpath.getName() + "__staging_"
-    try:
-        if parent is not None and fs.exists(parent):
-            for st in fs.listStatus(parent):
-                if st.getPath().getName().startswith(marker):
-                    fs.delete(st.getPath(), True)
-    except Exception:
-        pass
-    staging = f"{base}__staging_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)  # materializes BEFORE any rename
-    backup = jvm.org.apache.hadoop.fs.Path(base + "__backup")
-    if fs.exists(hpath):
-        # a live current store supersedes any stale backup; only THEN
-        # is the old backup safe to drop (r09 review: deleting it while
-        # current is MISSING — the recovery-replay state where the
-        # backup IS the last complete copy — re-opened the exact silent
-        # state-reset hole the rename checks below close)
-        if fs.exists(backup):
-            fs.delete(backup, True)
-        if not fs.rename(hpath, backup):
-            raise IOError(
-                f"store swap aborted: rename {path} -> {base}__backup "
-                "returned false; current store left in place"
-            )
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staging), hpath):
-        # the backup still holds the last complete store — leave it for
-        # _read_store's recovery path; do NOT fall through to delete it
-        raise IOError(
-            f"store swap failed: rename {staging} -> {path} returned "
-            "false; last complete store preserved at "
-            f"{base}__backup (auto-recovered on next read)"
-        )
-    fs.delete(backup, True)
 
 
 def ingest_available_now(
@@ -240,10 +164,6 @@ def upsert_stream_available_now(
     failed batch is retried after partially committing — the same
     end-to-end guarantee the reference gets from its PK, without a
     transactional store."""
-    from evidence_images_etl_airflow_spark.sinks.writers import (
-        idempotent_append_parquet,
-    )
-
     stream = spark.readStream.format(fmt).schema(schema).load(source_path)
     if transform is not None:
         stream = transform(stream)
@@ -347,7 +267,7 @@ def continuous_rollup_available_now(
                 "total_value",
             )
         )
-        target = _read_store(sess, target_path)
+        target = read_parquet_target(sess, target_path)
         if target is not None and batch_id <= _applied_batch(target):
             return  # replayed batch — already folded in
         base = partial if target is None else (
@@ -362,7 +282,7 @@ def continuous_rollup_available_now(
             )
         )
         merged = base.withColumn(_BATCH_COL, F.lit(batch_id).cast("bigint"))
-        _swap_store(sess, merged, target_path)
+        swap_parquet(sess, merged, target_path)
 
     q = (
         stream.writeStream.foreachBatch(land)
@@ -412,7 +332,7 @@ def heavy_hitters_stream_available_now(
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        store = _read_store(sess, summary_path)
+        store = read_parquet_target(sess, summary_path)
         if store is not None and batch_id <= _applied_batch(store):
             return  # replayed batch — folding it in again would break
             # the MG underestimate certificate (est could exceed true)
@@ -447,7 +367,7 @@ def heavy_hitters_stream_available_now(
                 .unionByName(err)
             )
         merged = merged.withColumn(_BATCH_COL, F.lit(batch_id).cast("bigint"))
-        _swap_store(sess, merged, summary_path)
+        swap_parquet(sess, merged, summary_path)
 
     q = (
         stream.writeStream.foreachBatch(land)
@@ -502,7 +422,7 @@ def countmin_stream_available_now(
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        store = _read_store(sess, table_path)
+        store = read_parquet_target(sess, table_path)
         if store is not None and batch_id <= _applied_batch(store):
             return  # replayed batch — cells are sums, a second add
             # would double-count and break single-pass equivalence
@@ -515,7 +435,7 @@ def countmin_stream_available_now(
             else merge_countmin_tables(store.drop(_BATCH_COL), partial)
         )
         merged = merged.withColumn(_BATCH_COL, F.lit(batch_id).cast("bigint"))
-        _swap_store(sess, merged, table_path)
+        swap_parquet(sess, merged, table_path)
 
     q = (
         stream.writeStream.foreachBatch(land)
@@ -557,7 +477,7 @@ def daily_counts_stream_available_now(
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        store = _read_store(sess, table_path)
+        store = read_parquet_target(sess, table_path)
         if store is not None and batch_id <= _applied_batch(store):
             return  # replayed batch — counts are sums, adding twice
             # would break single-pass equivalence
@@ -574,7 +494,7 @@ def daily_counts_stream_available_now(
                 .agg(F.sum("y").cast("bigint").alias("y"))
             )
         merged = merged.withColumn(_BATCH_COL, F.lit(batch_id).cast("bigint"))
-        _swap_store(sess, merged, table_path)
+        swap_parquet(sess, merged, table_path)
 
     q = (
         stream.writeStream.foreachBatch(land)
@@ -631,11 +551,8 @@ def score_ingest_stream_available_now(
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        jvm, fs, _hpath = _hadoop(sess, table_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            table_path.rstrip("/") + "/_SUCCESS"
-        )
-        if not fs.exists(marker):
+        hadoop_path, fs = hadoop_fs(sess, table_path)
+        if not fs.exists(hadoop_path(table_path.rstrip("/") + "/_SUCCESS")):
             # r15 ADVICE: with maxFilesPerTrigger unset, overlapping
             # landing files coalesce into ONE micro-batch, so the
             # bootstrap materialize could write duplicate ids and break

@@ -281,6 +281,26 @@ def _dec(col: str) -> F.Column:
     return F.col(col).cast("decimal(18,2)")
 
 
+def _lit_rows(rows, schema: str) -> F.Column:
+    """Driver-side ``rows`` (tuples in the DDL ``schema``'s column order)
+    as one generator column to select over a 1-row frame. Unlike
+    ``spark.createDataFrame(rows)``, whose Python-backed scan runs one
+    Python worker task per default-parallelism slot, the rows are plan
+    literals: no Python worker runs."""
+    from pyspark.sql.types import ArrayType, _parse_datatype_string
+
+    st = _parse_datatype_string(schema)
+    return F.inline(
+        F.array(*[
+            F.struct(*[
+                F.lit(v).cast(f.dataType).alias(f.name)
+                for v, f in zip(row, st.fields)
+            ])
+            for row in rows
+        ]).cast(ArrayType(st))
+    )
+
+
 # ===========================================================================
 # Reference-core queries (SURVEY §2) on the TPC-H-ish tables
 # ===========================================================================
@@ -3098,10 +3118,10 @@ def text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     merges = bpe_train(d, "text", n_merges=_BPE_MERGES)
-    return spark.createDataFrame(
+    return spark.range(0, 1, 1, 1).select(_lit_rows(
         merges,
         "rank int, pair_a string, pair_b string, merged string, pair_count bigint",
-    )
+    ))
 
 
 def _lang_oracle() -> str:
@@ -9903,7 +9923,7 @@ def join_autoplan_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
             if dec["left"]["n_rows"] >= dec["right"]["n_rows"]
             else dec["right"]
         )
-        meta = spark.createDataFrame(
+        meta = _lit_rows(
             [(
                 name, dec["strategy"], dec["num_salts"],
                 dec["left"]["n_rows"], dec["right"]["n_rows"],
@@ -9913,7 +9933,7 @@ def join_autoplan_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_left bigint, n_right bigint, big_max_degree bigint",
         )
         cnt = joined.agg(F.count("*").cast("bigint").alias("joined_rows"))
-        return meta.crossJoin(F.broadcast(cnt))  # 1-row count
+        return cnt.select(meta, "joined_rows")
 
     # The three cases are independent — each _case blocks the driver on
     # its planner pre-flight (two degree aggregations), so constructing
@@ -10293,7 +10313,7 @@ def join_autoplan_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             if dec["left"]["n_rows"] >= dec["right"]["n_rows"]
             else dec["right"]
         )
-        meta = spark.createDataFrame(
+        meta = _lit_rows(
             [(
                 name, dec["strategy"], dec["num_salts"],
                 dec["left"]["n_rows"], dec["right"]["n_rows"],
@@ -10305,7 +10325,7 @@ def join_autoplan_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "err_bound_left bigint, err_bound_right bigint",
         )
         cnt = joined.agg(F.count("*").cast("bigint").alias("joined_rows"))
-        return meta.crossJoin(F.broadcast(cnt))
+        return cnt.select(meta, "joined_rows")
 
     a = _case(
         "dim_broadcast",
@@ -11271,7 +11291,7 @@ def join_chain_autoplan(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders of magnitude over the result. The oracle routes the edge
     product through HUGEINT (ADVICE r11); engine-side the planner
     est is arbitrary-precision Python int, pinned to bigint only at
-    the createDataFrame boundary — the QUOTIENT fits int64 for any
+    the literal-row boundary — the QUOTIENT fits int64 for any
     plausible scale even where the raw product would not. NOTE:
     registered after the r11 verify head (rotation-slot rule);
     parity-proven locally at sf0.001 + sf0.01; heads the r12
@@ -11295,14 +11315,14 @@ def join_chain_autoplan(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("lineitem", "orders", "ok"), ("orders", "customer", "ck")],
         )
         actual = joined.agg(F.count("*").cast("bigint").alias("actual_rows"))
-        meta = spark.createDataFrame(
+        meta = _lit_rows(
             [
                 (name, i + 1, dec["order"][i], int(dec["est_rows"][i]))
                 for i in range(len(dec["order"]))
             ],
             "case_name string, step bigint, edge string, est_rows bigint",
         )
-        return meta.crossJoin(F.broadcast(actual))  # 1-row count
+        return actual.select(meta, "actual_rows")
 
     a = _case("dims_last", lineitem)
     b = _case("facts_first", lineitem.filter(F.col("l_quantity") == 1))

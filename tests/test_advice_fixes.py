@@ -227,32 +227,32 @@ def test_store_swap_leaves_backup_recoverable(spark, tmp_path):
     """r07 ADVICE: the old delete-then-rename swap had a crash window
     that lost the store entirely. The backup-preserving swap keeps a
     complete copy at every instant: simulate the crash state (current
-    store renamed aside, new one never landed) and _read_store must
+    store renamed aside, new one never landed) and read_parquet_target must
     recover the backup's contents."""
-    from evidence_images_etl_airflow_spark.streaming.file_stream import (
-        _read_store,
-        _swap_store,
+    from evidence_images_etl_airflow_spark.sinks.writers import (
+        read_parquet_target,
+        swap_parquet,
     )
 
     path = str(tmp_path / "store")
     df1 = spark.createDataFrame([("a", 1)], "item string, cnt long")
-    _swap_store(spark, df1, path)
-    assert {tuple(r) for r in _read_store(spark, path).collect()} == {("a", 1)}
+    swap_parquet(spark, df1, path)
+    assert {tuple(r) for r in read_parquet_target(spark, path).collect()} == {("a", 1)}
 
     df2 = spark.createDataFrame([("b", 2)], "item string, cnt long")
-    _swap_store(spark, df2, path)
-    assert {tuple(r) for r in _read_store(spark, path).collect()} == {("b", 2)}
+    swap_parquet(spark, df2, path)
+    assert {tuple(r) for r in read_parquet_target(spark, path).collect()} == {("b", 2)}
 
     # simulate the mid-swap crash: current renamed to backup, no new store
     import shutil
 
     shutil.move(path, path + "__backup")
-    got = _read_store(spark, path)
+    got = read_parquet_target(spark, path)
     assert got is not None
     assert {tuple(r) for r in got.collect()} == {("b", 2)}
     # neither path exists -> None (first-batch bootstrap), not an error
     shutil.rmtree(path + "__backup")
-    assert _read_store(spark, path) is None
+    assert read_parquet_target(spark, path) is None
 
 
 def test_heavy_hitters_store_skips_replayed_batch(spark, tmp_path):
@@ -355,16 +355,16 @@ def test_swap_store_failed_rename_preserves_backup(spark, tmp_path, monkeypatch)
     returning FALSE. A failed staging->current rename used to fall
     through to deleting the backup — the only remaining complete copy —
     and let the checkpoint commit a silent full state reset. It must
-    now raise with the backup intact, and _read_store must recover it."""
+    now raise with the backup intact, and read_parquet_target must recover it."""
     import pytest
 
-    from evidence_images_etl_airflow_spark.streaming import file_stream
+    from evidence_images_etl_airflow_spark.sinks import writers
 
     path = str(tmp_path / "store")
     df1 = spark.createDataFrame([("a", 1)], "item string, cnt long")
-    file_stream._swap_store(spark, df1, path)
+    writers.swap_parquet(spark, df1, path)
 
-    real_hadoop = file_stream._hadoop
+    real_hadoop = writers.hadoop_fs
 
     class FailSecondRename:
         """Proxy over the real FS: rename #2 (staging->current) fails."""
@@ -384,17 +384,17 @@ def test_swap_store_failed_rename_preserves_backup(spark, tmp_path, monkeypatch)
     calls = [0]
 
     def fake_hadoop(sess, p):
-        jvm, fs, hp = real_hadoop(sess, p)
-        return jvm, FailSecondRename(fs), hp
+        hadoop_path, fs = real_hadoop(sess, p)
+        return hadoop_path, FailSecondRename(fs)
 
-    monkeypatch.setattr(file_stream, "_hadoop", fake_hadoop)
+    monkeypatch.setattr(writers, "hadoop_fs", fake_hadoop)
     df2 = spark.createDataFrame([("b", 2)], "item string, cnt long")
     with pytest.raises(IOError, match="preserved"):
-        file_stream._swap_store(spark, df2, path)
-    monkeypatch.setattr(file_stream, "_hadoop", real_hadoop)
+        writers.swap_parquet(spark, df2, path)
+    monkeypatch.setattr(writers, "hadoop_fs", real_hadoop)
 
     # the backup is the last complete store and the recovery path reads it
-    got = file_stream._read_store(spark, path)
+    got = writers.read_parquet_target(spark, path)
     assert got is not None
     assert {tuple(r) for r in got.collect()} == {("a", 1)}
 
@@ -405,19 +405,19 @@ def test_swap_store_reclaims_leaked_staging_dirs(spark, tmp_path):
     identify. The next swap best-effort deletes such leftovers."""
     import os
 
-    from evidence_images_etl_airflow_spark.streaming import file_stream
+    from evidence_images_etl_airflow_spark.sinks import writers
 
     path = str(tmp_path / "store")
     df1 = spark.createDataFrame([("a", 1)], "item string, cnt long")
-    file_stream._swap_store(spark, df1, path)
+    writers.swap_parquet(spark, df1, path)
     # simulate two crashed swaps' leftovers
     os.makedirs(path + "__staging_deadbeef/x", exist_ok=True)
     os.makedirs(path + "__staging_cafebabe", exist_ok=True)
     df2 = spark.createDataFrame([("b", 2)], "item string, cnt long")
-    file_stream._swap_store(spark, df2, path)
+    writers.swap_parquet(spark, df2, path)
     leftovers = [n for n in os.listdir(tmp_path) if "__staging_" in n]
     assert leftovers == []
-    assert {tuple(r) for r in file_stream._read_store(spark, path).collect()} == {
+    assert {tuple(r) for r in writers.read_parquet_target(spark, path).collect()} == {
         ("b", 2)
     }
 
@@ -487,15 +487,15 @@ def test_swap_store_recovery_state_keeps_backup_on_failure(spark, tmp_path, monk
 
     import pytest
 
-    from evidence_images_etl_airflow_spark.streaming import file_stream
+    from evidence_images_etl_airflow_spark.sinks import writers
 
     path = str(tmp_path / "store")
     df1 = spark.createDataFrame([("a", 1)], "item string, cnt long")
-    file_stream._swap_store(spark, df1, path)
+    writers.swap_parquet(spark, df1, path)
     # simulate the crashed-swap recovery state
     shutil.move(path, path + "__backup")
 
-    real_hadoop = file_stream._hadoop
+    real_hadoop = writers.hadoop_fs
 
     class FailAllRenames:
         def __init__(self, fs):
@@ -508,16 +508,16 @@ def test_swap_store_recovery_state_keeps_backup_on_failure(spark, tmp_path, monk
             return getattr(self._fs, name)
 
     def fake_hadoop(sess, p):
-        jvm, fs, hp = real_hadoop(sess, p)
-        return jvm, FailAllRenames(fs), hp
+        hadoop_path, fs = real_hadoop(sess, p)
+        return hadoop_path, FailAllRenames(fs)
 
-    monkeypatch.setattr(file_stream, "_hadoop", fake_hadoop)
+    monkeypatch.setattr(writers, "hadoop_fs", fake_hadoop)
     df2 = spark.createDataFrame([("b", 2)], "item string, cnt long")
     with pytest.raises(IOError):
-        file_stream._swap_store(spark, df2, path)
-    monkeypatch.setattr(file_stream, "_hadoop", real_hadoop)
+        writers.swap_parquet(spark, df2, path)
+    monkeypatch.setattr(writers, "hadoop_fs", real_hadoop)
 
-    got = file_stream._read_store(spark, path)
+    got = writers.read_parquet_target(spark, path)
     assert got is not None, "backup must survive the failed recovery swap"
     assert {tuple(r) for r in got.collect()} == {("a", 1)}
 

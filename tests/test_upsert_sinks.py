@@ -119,22 +119,6 @@ def test_write_partitioned_layout_prunes(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(bucket" in plan
 
 
-def test_compact_parquet_reduces_files_keeps_data(spark, tmp_path):
-    import os
-
-    from evidence_images_etl_airflow_spark.sinks.writers import compact_parquet
-
-    path = f"{tmp_path}/frag"
-    spark.range(0, 10_000).repartition(40).write.parquet(path)
-    before = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert before == 40
-    compact_parquet(spark, path, target_file_bytes=10**9)
-    after = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert after == 1
-    assert spark.read.parquet(path).count() == 10_000
-    assert spark.read.parquet(path).agg(F.sum("id")).first()[0] == 49995000
-
-
 def test_bloom_filter_options_exact_map():
     """r11: the parquet.bloom.filter.* option map is a pure function —
     exact strings, per-column ndv, validation."""

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 
 from evidence_images_etl_airflow_spark.sinks import versioned as V
+from evidence_images_etl_airflow_spark.sinks.writers import hadoop_fs
 
 
 @pytest.fixture()
@@ -85,9 +86,9 @@ def _range_clustered(spark, table):
 
 
 def _file_sizes(spark, table, version):
-    jvm, fs = V._fs(spark, table)
+    hadoop_path, fs = hadoop_fs(spark, table)
     out = {}
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{table}/v={version}")):
+    for st in fs.listStatus(hadoop_path(f"{table}/v={version}")):
         name = st.getPath().getName()
         if name.endswith(".parquet"):
             out[name] = st.getLen()

@@ -3,14 +3,23 @@ its oracle SQL on DuckDB over the same parquet, then compares row
 counts, column names, and values — a stand-in for the driver's
 CORRECTNESS gate so mismatches surface before a round ends.
 
-Usage: python tools/parity.py [sf_dir] [query ...]
+Usage: python tools/parity.py [--permute SEED] [sf_dir] [query ...]
+
+``--permute SEED`` runs on a temporary copy of ``sf_dir`` whose tables
+have their rows in a seeded random order and 97-row row groups, with
+``spark.sql.shuffle.partitions=3``: a query whose output depends on
+input order, file layout or partition count then shows as a mismatch.
+The copy is removed at exit.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import math
+import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -63,14 +72,50 @@ def compare(name: str, spark_df, oracle: str, con) -> tuple[bool, str]:
     return True, f"OK ({len(sp)} rows)"
 
 
+def _permuted_copy(sf_dir: str, seed: int, out_dir: str) -> None:
+    """Write every parquet table of ``sf_dir`` to ``out_dir`` with its
+    rows permuted by ``seed`` and 97-row row groups."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    for name in sorted(os.listdir(sf_dir)):
+        if name.endswith(".parquet"):
+            t = pq.read_table(os.path.join(sf_dir, name))
+            pq.write_table(
+                t.take(rng.permutation(t.num_rows)),
+                os.path.join(out_dir, name),
+                row_group_size=97,
+            )
+
+
 def main():
+    permute = None
+    if "--permute" in sys.argv:
+        i = sys.argv.index("--permute")
+        permute = int(sys.argv[i + 1])
+        del sys.argv[i : i + 2]
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
+    if permute is None:
+        run(sf_dir, only, shuffle_partitions=8)
+        return
+    tmp = tempfile.mkdtemp(prefix="parity-permuted-")
+    try:
+        _permuted_copy(sf_dir, permute, tmp)
+        run(tmp, only, shuffle_partitions=3)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
+
+def run(sf_dir: str, only: set[str], shuffle_partitions: int) -> None:
     from evidence_images_etl_airflow_spark.session import get_session
     from evidence_images_etl_airflow_spark.workload import REGISTRY
 
-    spark = get_session("parity", cpus=8, extra_conf={"spark.sql.shuffle.partitions": "8"})
+    spark = get_session(
+        "parity", cpus=8,
+        extra_conf={"spark.sql.shuffle.partitions": str(shuffle_partitions)},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
