@@ -28,6 +28,7 @@ from functools import partial
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from evidence_images_etl_airflow_spark.operators import skew
 from evidence_images_etl_airflow_spark.operators.dedup import (
     bloom_build,
     bloom_might_contain,
@@ -109,8 +110,8 @@ def join_size_by_degree(
     global top-n window over the degree table (WindowGroupLimit keeps
     n rows per partition map-side). Nothing here is ever the size of
     the join output."""
-    da = left.groupBy(F.col(key)).agg(F.count("*").cast("bigint").alias("n_left"))
-    db = right.groupBy(F.col(key)).agg(F.count("*").cast("bigint").alias("n_right"))
+    da = skew._degrees(left, [key], "n_left")
+    db = skew._degrees(right, [key], "n_right")
     deg = da.join(db, key).select(
         key, "n_left", "n_right", (F.col("n_left") * F.col("n_right")).alias("pairs")
     )
@@ -134,31 +135,32 @@ def join_size_by_degree(
     )
 
 
-def estimate_join_rows(left: DataFrame, right: DataFrame, key: str) -> int:
-    """EXACT |left ⋈ right| on ``key`` without executing the join:
-    sum over distinct keys of deg_left(k) * deg_right(k) — the scalar
-    form of :func:`join_size_by_degree` (which additionally names the
-    heavy keys). Two map-side-combinable degree aggregations + one
-    join at distinct-key cardinality; pure integer math, so the
-    estimate is bit-identical cross-engine."""
-    da = left.groupBy(key).agg(F.count("*").cast("bigint").alias("__nl"))
-    db = right.groupBy(key).agg(F.count("*").cast("bigint").alias("__nr"))
+def _edge_profile(
+    a: DataFrame, b: DataFrame, key: str
+) -> tuple[int, skew._KeyStats, skew._KeyStats]:
+    """``(|a ⋈ b|, a's stats, b's stats)`` on ``key`` from ONE 1-row
+    action over the full outer join of the two degree tables. The join
+    size sums na * nb over matching keys; each side's ``_KeyStats``
+    sees all of that side's keys, NULL and unmatched ones included, so
+    it equals ``skew._key_stats`` of the side. Integer math."""
     r = (
-        da.join(db, key)
+        skew._degrees(a, [key], "__na")
+        .join(skew._degrees(b, [key], "__nb"), key, "full_outer")
         .agg(
-            F.coalesce(F.sum(F.col("__nl") * F.col("__nr")), F.lit(0))
-            .cast("bigint")
-            .alias("n")
+            F.coalesce(F.sum(F.col("__na") * F.col("__nb")), F.lit(0)).cast("bigint"),
+            *skew._side_aggs("__na"),
+            *skew._side_aggs("__nb"),
         )
         .first()
     )
-    return int(r.n)
+    return r[0], skew._KeyStats(*r[1:4]), skew._KeyStats(*r[4:])
 
 
 def plan_join_chain(
     tables: dict[str, DataFrame],
     edges: list[tuple[str, str, str]],
-    step_joiner=None,
+    *,
+    broadcast_max_rows: int = 1_000_000,
 ) -> tuple[DataFrame, dict]:
     """Statistics-driven JOIN-ORDER planning for a chain/tree of
     equi-joins (r11) — the step above :func:`plan_equi_join`'s
@@ -176,9 +178,10 @@ def plan_join_chain(
 
     Algorithm (classic System R greedy, left-deep):
 
-    1. price every edge EXACTLY: |A ⋈ B| via :func:`estimate_join_rows`
-       (degree aggregations at distinct-key cardinality — the
-       pre-flight cost, never the join output). These pre-flight jobs
+    1. profile every edge in one action: its EXACT size |A ⋈ B| and
+       both sides' degree statistics on its key, from the two degree
+       tables (distinct-key cardinality, never the join output). A
+       table's row count is its degree sum on any edge. The profiles
        run concurrently in the caller's Spark job group, so
        ``cancelJobGroup`` cancels them with the rest of the query;
     2. start from the cheapest edge (ties: lexicographic edge label);
@@ -188,18 +191,17 @@ def plan_join_chain(
        containment/uniformity assumption, in integer math so the
        whole decision is cross-engine oracle-able.
 
+    Each step's physical strategy is ``plan_equi_join``'s decision
+    rule under ``broadcast_max_rows``. The profiles hold the right
+    side's statistics (a base table on its edge key) and the first
+    step's left side's; an intermediate left side is measured, and
+    only when the right side misses the budget.
+
     Returns ``(joined, decision)``: the left-deep join in the chosen
     order (output rows/semantics identical to any other order), and
     ``decision`` = {"edge_rows": {label: exact}, "n_rows": {table:
-    exact}, "order": [labels], "est_rows": [chained ints]}.
-
-    ``step_joiner(left, right, key) -> DataFrame`` (optional) executes
-    each step instead of the plain ``.join`` — pass a
-    ``skew.plan_equi_join`` wrapper to compose the two planners
-    (ORDER here, physical strategy per step there); it must preserve
-    inner-equi-join semantics. The wrapper's decisions land in
-    ``decision["step_decisions"]`` if the callable returns
-    ``(df, dict)`` pairs."""
+    exact}, "order": [labels], "est_rows": [chained ints],
+    "step_decisions": [each step's ``plan_equi_join`` decision]}."""
     if not edges:
         raise ValueError("plan_join_chain needs at least one edge")
     names = set(tables)
@@ -215,23 +217,18 @@ def plan_join_chain(
     def _label(a: str, b: str) -> str:
         return f"{a}*{b}"
 
-    # Up-front shape validation (ADVICE r11): (a) parallel edges
-    # between the same table pair collide in the 'a*b' label and would
-    # silently overwrite edge_rows; (b) the canonical final select is
-    # by NAME over all tables' non-key columns, so a non-key column
-    # name shared by two tables would only surface as an
-    # ambiguous-reference error at execution time. Fail loudly now,
-    # like the other shape checks.
-    seen_labels: set[str] = set()
+    # Up-front shape checks (ADVICE r11): parallel edges would collide
+    # in the 'a*b' label, and a non-key column shared by two tables
+    # would make the canonical final select ambiguous only at run time.
+    seen_pairs: set[frozenset[str]] = set()
     for a, b, _k in edges:
-        for lbl in (_label(a, b), _label(b, a)):
-            if lbl in seen_labels:
-                raise ValueError(
-                    f"duplicate edge between tables {a!r} and {b!r} — "
-                    "parallel edges are not a chain/tree; pre-join or "
-                    "alias one side"
-                )
-        seen_labels.add(_label(a, b))
+        if frozenset((a, b)) in seen_pairs:
+            raise ValueError(
+                f"duplicate edge between tables {a!r} and {b!r} — "
+                "parallel edges are not a chain/tree; pre-join or "
+                "alias one side"
+            )
+        seen_pairs.add(frozenset((a, b)))
     edge_keys = {k for _a, _b, k in edges}
     col_owner: dict[str, str] = {}
     for t, df in tables.items():
@@ -246,38 +243,40 @@ def plan_join_chain(
                 )
             col_owner[c] = t
 
-    # 1. exact per-edge pricing + per-table row counts (the row count
-    # is the degree sum, so it falls out of the same aggregations; a
-    # plain count() keeps the code obvious — both are one scan).
-    # All pre-flight jobs are mutually independent 1-row aggregates, so
-    # they run CONCURRENTLY (guide §2.6 "overlap independent jobs"):
-    # Spark's scheduler interleaves their tasks, so the pre-flight wall
-    # clock is ~max instead of sum. Decisions are unchanged: the same
-    # exact statistics arrive, just sooner.
+    # 1. one profile per edge. They are independent 1-row aggregates,
+    # so they run concurrently (guide §2.6); one unioned action
+    # measured slower (OPTIMIZATION_r17.md, ep5 row).
     spark = next(iter(tables.values())).sparkSession
-    stats = parallel_actions(
+    profiles = parallel_actions(
         spark,
-        [partial(estimate_join_rows, tables[a], tables[b], k) for a, b, k in edges]
-        + [df.count for df in tables.values()],
+        [partial(_edge_profile, tables[a], tables[b], k) for a, b, k in edges],
     )
-    edge_rows = {_label(a, b): n for (a, b, _k), n in zip(edges, stats)}
-    n_rows = {t: int(n) for t, n in zip(tables, stats[len(edges):])}
+    edge_rows: dict[str, int] = {}
+    side_stats: dict[tuple[str, str], skew._KeyStats] = {}
+    for (a, b, k), (rows, sa, sb) in zip(edges, profiles):
+        edge_rows[_label(a, b)] = rows
+        side_stats[a, k], side_stats[b, k] = sa, sb
+    # a table's row count is its degree sum on any edge it sits on
+    n_rows = dict.fromkeys(tables, 0) | {t: s.n_rows for (t, _k), s in side_stats.items()}
 
-    step_decisions: list = []
+    step_decisions: list[dict] = []
 
-    def _join(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
-        if step_joiner is None:
-            return left.join(right, key)
-        out = step_joiner(left, right, key)
-        if isinstance(out, tuple):  # (df, decision) — plan_equi_join shape
-            step_decisions.append(out[1])
-            return out[0]
-        return out
+    def _join(left: DataFrame, new: str, key: str, left_stats=None) -> DataFrame:
+        rs = side_stats[new, key]
+        ls = None
+        if not skew._right_fits("inner", rs, broadcast_max_rows):
+            ls = left_stats or skew._key_stats(left, [key])
+        joined, dec = skew._plan_from_stats(
+            left, tables[new], [key], "inner", ls, rs,
+            broadcast_max_rows=broadcast_max_rows,
+        )
+        step_decisions.append(dec)
+        return joined
 
     # 2. cheapest starting edge
     start = min(edges, key=lambda e: (edge_rows[_label(e[0], e[1])], _label(e[0], e[1])))
     a0, b0, k0 = start
-    joined = _join(tables[a0], tables[b0], k0)
+    joined = _join(tables[a0], b0, k0, side_stats[a0, k0])
     in_plan = {a0, b0}
     order = [_label(a0, b0)]
     est = edge_rows[_label(a0, b0)]
@@ -300,7 +299,7 @@ def plan_join_chain(
         if best is None:
             raise ValueError("edges do not form a connected chain/tree")
         chained, label, e, new, k = best
-        joined = _join(joined, tables[new], k)
+        joined = _join(joined, new, k)
         in_plan.add(new)
         order.append(label)
         est = chained
@@ -311,16 +310,8 @@ def plan_join_chain(
     # join keys in edge-list order, then each table's remaining
     # columns in the caller's ``tables`` order (so two different
     # plans over the same inputs produce position-identical frames).
-    keys_in_order: list[str] = []
-    for _a, _b, k in edges:
-        if k not in keys_in_order:
-            keys_in_order.append(k)
-    rest = [
-        c
-        for t in tables
-        for c in tables[t].columns
-        if c not in keys_in_order
-    ]
+    keys_in_order = list(dict.fromkeys(k for _a, _b, k in edges))
+    rest = [c for df in tables.values() for c in df.columns if c not in keys_in_order]
     joined = joined.select(*keys_in_order, *rest)
 
     decision = {
@@ -328,7 +319,6 @@ def plan_join_chain(
         "n_rows": n_rows,
         "order": order,
         "est_rows": est_rows,
+        "step_decisions": step_decisions,
     }
-    if step_decisions:
-        decision["step_decisions"] = step_decisions
     return joined, decision

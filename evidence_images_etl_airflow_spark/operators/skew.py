@@ -20,6 +20,7 @@ partition layouts before a bucketed write).
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import partial
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
@@ -29,6 +30,10 @@ from evidence_images_etl_airflow_spark.session import parallel_actions
 
 SALT_COL = "__salt"
 
+# fixed dials of the decision rule: the hot-key share of the big side,
+# the salt-factor cap, and the sketch's Misra-Gries counters per partition
+_SKEW_SHARE, _MAX_SALTS, _MG_CAPACITY = 0.2, 64, 16384
+
 
 def salted_join(
     skewed: DataFrame,
@@ -36,33 +41,25 @@ def salted_join(
     on: Sequence[str],
     num_salts: int = 16,
     how: str = "inner",
-    salt_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Equi-join robust to hot keys on the ``skewed`` side.
 
-    The salt is CONTENT-BASED — ``pmod(xxhash64(salt_cols), n)`` — not
-    ``rand()``: rand's output depends on partition layout and changes
-    under repartition or task retry, which contradicts this operator's
-    whole reason to exist (deterministic layouts that must not depend on
-    runtime re-planning). A content hash is retry-stable, just as
-    uniform, and reproducible across runs.
-
-    ``salt_cols`` are the columns the salt hashes — they must VARY
-    WITHIN a join key (a row id, an event timestamp), since salting on
-    the join key itself would land every row of the hot key in one salt
-    bucket. Defaults to all non-key columns. The small side is exploded
-    across every salt so every (key, salt) pair finds its match. Output
-    columns match a plain ``skewed.join(small, on, how)``.
+    The salt is CONTENT-BASED — ``pmod(xxhash64(non-key columns), n)``
+    — not ``rand()``, whose output changes under repartition or task
+    retry: this operator exists for deterministic layouts that must not
+    depend on runtime re-planning. The non-key columns VARY WITHIN a
+    join key (a row id, an event timestamp); a salt on the key itself
+    would land the whole hot key in one bucket. The small side is
+    exploded across every salt so every (key, salt) pair finds its
+    match. Output columns match a plain ``skewed.join(small, on, how)``.
     """
     if how not in ("inner", "left", "left_outer"):
         raise ValueError(f"salted_join supports inner/left joins, got {how!r}")
-    hash_cols = list(salt_cols) if salt_cols else [
-        c for c in skewed.columns if c not in set(on)
-    ]
+    hash_cols = [c for c in skewed.columns if c not in set(on)]
     if not hash_cols:
         raise ValueError(
-            "no salt_cols: every column is a join key, so a content salt "
-            "cannot spread the hot key — add a row-varying column"
+            "no non-key column: every column is a join key, so a content "
+            "salt cannot spread the hot key — add a row-varying column"
         )
     salted = skewed.withColumn(
         SALT_COL,
@@ -74,6 +71,23 @@ def salted_join(
     return salted.join(exploded, [*on, SALT_COL], how).drop(SALT_COL)
 
 
+def _degrees(df: DataFrame, on: Sequence[str], name: str) -> DataFrame:
+    """``df``'s degree table: one row per distinct ``on`` key, NULL
+    included, with its row count in ``name``. Map-side combinable, so
+    it shuffles at distinct-key cardinality, never row cardinality."""
+    return df.groupBy(*[F.col(c) for c in on]).agg(F.count("*").cast("bigint").alias(name))
+
+
+def _side_aggs(d: str) -> list:
+    """(n_rows, n_keys, max_degree) aggregates over degree column ``d``;
+    a NULL ``d`` (a key this side lacks) counts nowhere."""
+    return [
+        F.coalesce(F.sum(d), F.lit(0)).cast("bigint"),
+        F.count(d).cast("bigint"),
+        F.coalesce(F.max(d), F.lit(0)).cast("bigint"),
+    ]
+
+
 def key_skew_profile(df: DataFrame, keys: Sequence[str], top: int = 10) -> DataFrame:
     """Diagnostic: per-key row counts for the heaviest keys plus their
     share of the table — how you decide whether to salt, and with how
@@ -81,22 +95,24 @@ def key_skew_profile(df: DataFrame, keys: Sequence[str], top: int = 10) -> DataF
     budget)."""
     total = df.count()
     return (
-        df.groupBy(*keys)
-        .agg(F.count("*").alias("n_rows"))
+        _degrees(df, keys, "n_rows")
         .withColumn("share", F.round(F.col("n_rows") / F.lit(total), 6))
         .orderBy(F.col("n_rows").desc(), *keys)
         .limit(top)
     )
 
 
-class _SketchStats(NamedTuple):
+class _KeyStats(NamedTuple):
+    """A join side's degree statistics on its key. ``n_keys`` is None
+    and ``err_bound`` positive only for a compressed sketch."""
+
     n_rows: int
     n_keys: int | None
     max_degree: int
-    err_bound: int
+    err_bound: int = 0
 
 
-def _key_stats_sketch(df: DataFrame, on: Sequence[str], capacity: int) -> _SketchStats:
+def _key_stats_sketch(df: DataFrame, on: Sequence[str], capacity: int) -> _KeyStats:
     """Bounded-memory degree statistics: the exact ``_key_stats`` agg
     shuffles one row per DISTINCT key — billions of rows for a 100 TB
     fact table, just to plan the join. This variant spends one scan +
@@ -115,12 +131,9 @@ def _key_stats_sketch(df: DataFrame, on: Sequence[str], capacity: int) -> _Sketc
     non-printing separator; NULL components map to a sentinel so
     (NULL, x) and ('', x) stay distinct.
 
-    ONE scan total (r11, ADVICE r10): the MG stage's
-    ``emit_row_count`` sentinel carries each partition's exact batch
-    row sum, so n_rows, the estimates, and the error bound all come
-    out of the same pass + one O(partitions x capacity) merge — where
-    this previously paid a separate full ``count()`` per join side,
-    doubling the pre-flight cost the sketch mode exists to avoid."""
+    ONE scan total (r11): the MG stage's ``emit_row_count`` sentinel
+    carries each partition's exact row sum, so n_rows comes out of the
+    same pass as the estimates and the error bound."""
     from evidence_images_etl_airflow_spark.operators.sketches import (
         misra_gries_summaries,
     )
@@ -146,29 +159,29 @@ def _key_stats_sketch(df: DataFrame, on: Sequence[str], capacity: int) -> _Sketc
         )
         .first()
     )
-    return _SketchStats(
-        n_rows=int(row.n_rows),
-        n_keys=None,
-        max_degree=int(row.top) + int(row.err),
-        err_bound=int(row.err),
-    )
+    top, err = int(row.top), int(row.err)
+    return _KeyStats(int(row.n_rows), None, top + err, err)
 
 
-def _key_stats(df: DataFrame, on: Sequence[str]):
-    """(n_rows, n_keys, max_degree) of a join side — one map-side-
-    combinable degree aggregation per side, shuffled at distinct-key
-    cardinality, never at row cardinality. The 1-row collect is the
-    same constant-bounded driver read every planner performs."""
-    return (
-        df.groupBy(*[F.col(c) for c in on])
-        .agg(F.count("*").alias("d"))
-        .agg(
-            F.coalesce(F.sum("d"), F.lit(0)).cast("bigint").alias("n_rows"),
-            F.count("*").cast("bigint").alias("n_keys"),
-            F.coalesce(F.max("d"), F.lit(0)).cast("bigint").alias("max_degree"),
-        )
-        .first()
-    )
+def _key_stats(df: DataFrame, on: Sequence[str]) -> _KeyStats:
+    """Exact statistics of a join side: its degree table aggregated to
+    one row, a constant-bounded driver read."""
+    return _KeyStats(*_degrees(df, on, "__d").agg(*_side_aggs("__d")).first())
+
+
+# join types whose right (left) side Spark can build into a broadcast
+# hash join: only the NON-preserved side of an outer join is buildable.
+# A hint on the preserved side is silently ignored and a shuffle join
+# runs, so the rule is eligibility-gated (r09 review).
+_BUILDS_RIGHT = ("inner", "left", "leftouter", "leftsemi", "semi", "leftanti", "anti", "cross")
+_BUILDS_LEFT = ("inner", "right", "rightouter", "cross")
+
+
+def _right_fits(how: str, rs: _KeyStats, broadcast_max_rows: int) -> bool:
+    """Whether the decision rule broadcasts the right side: it fits the
+    budget and Spark can build it for this join type. The rule then
+    never reads the left side's statistics."""
+    return how.lower().replace("_", "") in _BUILDS_RIGHT and rs.n_rows <= broadcast_max_rows
 
 
 def plan_equi_join(
@@ -179,32 +192,25 @@ def plan_equi_join(
     *,
     broadcast_max_rows: int = 1_000_000,
     target_rows_per_task: int = 2_000_000,
-    skew_share: float = 0.2,
-    max_salts: int = 64,
-    salt_cols: Sequence[str] | None = None,
     stats_mode: str = "exact",
-    mg_capacity: int = 4096,
     lazy_stats: bool = False,
 ) -> tuple[DataFrame, dict]:
     """Statistics-driven equi-join: measure both sides' key-degree
     profiles, then pick the physical strategy — closing the loop
-    ``join_size_by_degree``'s docstring describes (VERDICT r08 item 6:
-    the statistic existed, nothing consumed it). Decision rule, in
+    ``join_size_by_degree``'s docstring describes. Decision rule, in
     order:
 
     1. BROADCAST the smaller side when its row count fits
-       ``broadcast_max_rows`` AND Spark can actually build that side
-       for this join type (only the NON-preserved side of an outer
-       join is buildable; a hint on the preserved side is silently
-       ignored, so recording it would misreport the executed plan);
-    2. SALT when the bigger side's hottest key alone both exceeds
-       ``skew_share`` of that side's rows AND overflows a shuffle
-       task's row budget — the salt factor is DERIVED,
-       ceil(hot_rows / target_rows_per_task) clamped to [2,
-       max_salts], instead of the caller-guessed constant
-       ``salted_join`` alone requires. Only shapes ``salted_join``
-       supports are salted (skewed side on the left for inner/left;
-       a right-skewed INNER join flips sides);
+       ``broadcast_max_rows`` AND Spark can build that side for this
+       join type (``_BUILDS_RIGHT``/``_BUILDS_LEFT``);
+    2. SALT when the bigger side's hottest key alone both exceeds a
+       fifth of that side's rows and overflows a shuffle task's row
+       budget — the salt factor is DERIVED,
+       ceil(hot_rows / target_rows_per_task) clamped to [2, 64],
+       instead of the caller-guessed constant ``salted_join`` alone
+       requires. Only shapes ``salted_join`` supports are salted
+       (skewed side on the left for inner/left; a right-skewed INNER
+       join flips sides);
     3. otherwise PLAIN shuffle join (AQE skew splitting still
        applies at runtime) — including skewed shapes salting can't
        express (e.g. right/full outer), which fall through rather
@@ -222,8 +228,9 @@ def plan_equi_join(
     executor-killing shuffle. The pre-flight jobs run in the caller's
     Spark job group (``session.parallel_actions``), so
     ``cancelJobGroup`` cancels them with the rest of the query.
+    ``stats_mode="sketch"`` measures with ``_key_stats_sketch`` instead.
 
-    ``lazy_stats=True`` (r11, VERDICT r10 item 5 dogfooding): measure
+    ``lazy_stats=True`` (r11): measure
     the RIGHT side first and skip the left side's pre-flight entirely
     when the right side already fits the broadcast budget for this
     join type — the common dim-join case then costs one small-side
@@ -232,15 +239,41 @@ def plan_equi_join(
     default: the both-sides profile is what the oracle-checked
     autoplan queries assert."""
     on = list(on)
-    if stats_mode not in ("exact", "sketch"):
+    if stats_mode == "exact":
+        stats = partial(_key_stats, on=on)
+    elif stats_mode == "sketch":
+        stats = partial(_key_stats_sketch, on=on, capacity=_MG_CAPACITY)
+    else:
         raise ValueError(
             f"stats_mode must be 'exact' or 'sketch', got {stats_mode!r}"
         )
+    if lazy_stats:
+        # the left pre-flight is CONDITIONAL on the right result
+        rs = stats(right)
+        ls = None if _right_fits(how, rs, broadcast_max_rows) else stats(left)
+    else:
+        # both independent pre-flights run concurrently (guide §2.6):
+        # ~max(side) wall clock instead of the sum
+        rs, ls = parallel_actions(
+            left.sparkSession, [partial(stats, right), partial(stats, left)]
+        )
+    return _plan_from_stats(
+        left, right, on, how, ls, rs, broadcast_max_rows=broadcast_max_rows,
+        target_rows_per_task=target_rows_per_task, stats_mode=stats_mode,
+    )
 
-    def _stats(side: DataFrame):
-        if stats_mode == "exact":
-            return _key_stats(side, on)
-        return _key_stats_sketch(side, on, mg_capacity)
+
+def _plan_from_stats(
+    left: DataFrame, right: DataFrame, on: list[str], how: str,
+    ls: _KeyStats | None, rs: _KeyStats, *, broadcast_max_rows: int,
+    target_rows_per_task: int = 2_000_000, stats_mode: str = "exact",
+) -> tuple[DataFrame, dict]:
+    """:func:`plan_equi_join`'s decision rule over statistics already
+    measured: ``ls``/``rs`` are the left/right side's ``_KeyStats`` on
+    ``on``. ``ls`` may be None only when :func:`_right_fits`, the one
+    case the rule never reads it. ``plan_equi_join`` calls this after
+    measuring; ``joins.plan_join_chain`` calls it with the statistics
+    its edge profiles already hold."""
 
     def _rec(s) -> dict | None:
         if s is None:
@@ -251,13 +284,6 @@ def plan_equi_join(
         return rec
 
     h = how.lower().replace("_", "")
-    # Spark can only build the NON-preserved side of an outer
-    # BroadcastHashJoin: a broadcast hint on the preserved side is
-    # silently ignored and a shuffle join runs anyway — recording
-    # "broadcast" for those shapes would misreport the executed plan
-    # (r09 review), so the decision rule itself is eligibility-gated.
-    can_broadcast_right = h in ("inner", "left", "leftouter", "leftsemi", "semi", "leftanti", "anti", "cross")
-    can_broadcast_left = h in ("inner", "right", "rightouter", "cross")
     # duplicate non-key names: the plain join keeps both (ambiguous by
     # name), so no by-name reorder is possible — and the side-flipped
     # salted shape would change column ORDER, so flipping is disabled.
@@ -265,11 +291,9 @@ def plan_equi_join(
         {c for c in left.columns if c not in on} & set(right.columns)
     )
 
-    # Semi/anti joins output ONLY the left side's columns — selecting
-    # right-side non-key columns would raise UNRESOLVED_COLUMN (r09
-    # ADVICE). No strategy reorders columns for these shapes (salting
-    # is never chosen for them and a broadcast hint is order-neutral),
-    # so the plain join's output is already canonical.
+    # Semi/anti joins output ONLY the left side's columns, so a by-name
+    # reorder would raise UNRESOLVED_COLUMN (r09 ADVICE); salting never
+    # applies to them and a broadcast hint keeps column order.
     semi_anti = h in ("leftsemi", "semi", "leftanti", "anti")
 
     def _canonical(j: DataFrame) -> DataFrame:
@@ -281,38 +305,23 @@ def plan_equi_join(
             *[c for c in right.columns if c not in on],
         )
 
-    if lazy_stats:
-        # the left pre-flight is CONDITIONAL on the right result —
-        # sequential by design (the whole point of lazy_stats)
-        rs = _stats(right)
-        ls = None
-        if not (can_broadcast_right and rs.n_rows <= broadcast_max_rows):
-            ls = _stats(left)
-    else:
-        # both pre-flights always run and are independent 1-row
-        # aggregates: submit them concurrently (guide §2.6) so the
-        # pre-flight costs ~max(side) wall clock instead of the sum —
-        # identical statistics, identical decision
-        rs, ls = parallel_actions(
-            left.sparkSession, [lambda: _stats(right), lambda: _stats(left)]
-        )
     decision = {
         "left": _rec(ls),
         "right": _rec(rs),
         "num_salts": None,
         "stats_mode": stats_mode,
     }
-    if can_broadcast_right and rs.n_rows <= broadcast_max_rows:
+    if _right_fits(how, rs, broadcast_max_rows):
         decision["strategy"] = "broadcast_right"
         return _canonical(left.join(F.broadcast(right), on, how)), decision
-    if can_broadcast_left and ls.n_rows <= broadcast_max_rows:
+    if h in _BUILDS_LEFT and ls.n_rows <= broadcast_max_rows:
         decision["strategy"] = "broadcast_left"
         return _canonical(F.broadcast(left).join(right, on, how)), decision
 
     big_is_left = ls.n_rows >= rs.n_rows
     bs = ls if big_is_left else rs
     skewed = (
-        bs.max_degree > skew_share * bs.n_rows
+        bs.max_degree > _SKEW_SHARE * bs.n_rows
         and bs.max_degree > target_rows_per_task
     )
     # salted_join supports inner/left with the skewed side on the LEFT;
@@ -326,7 +335,7 @@ def plan_equi_join(
     )
     if skewed and saltable:
         n = -(-bs.max_degree // target_rows_per_task)  # ceil div
-        n = int(max(2, min(max_salts, n)))
+        n = int(max(2, min(_MAX_SALTS, n)))
         decision["strategy"] = "salted"
         decision["num_salts"] = n
         # salted_join accepts only the exact spellings inner/left —
@@ -335,9 +344,9 @@ def plan_equi_join(
         # saltable gate don't raise mid-pipeline (r09 ADVICE).
         sh = "inner" if h == "inner" else "left"
         j = (
-            salted_join(left, right, on, num_salts=n, how=sh, salt_cols=salt_cols)
+            salted_join(left, right, on, num_salts=n, how=sh)
             if big_is_left
-            else salted_join(right, left, on, num_salts=n, how=sh, salt_cols=salt_cols)
+            else salted_join(right, left, on, num_salts=n, how=sh)
         )
         return _canonical(j), decision
     decision["strategy"] = "shuffle"

@@ -29,6 +29,14 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else 32g or half the host's
+    physical memory, whichever is less: a heap sized past the host's
+    memory lets the JVM be killed mid-run once its use grows."""
+    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(32 << 10, half_mib)}m"
+
+
 def get_session(
     app_name: str = "evidence-images-spark",
     cpus: int | None = None,
@@ -58,7 +66,7 @@ def get_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- local-mode ergonomics ---
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

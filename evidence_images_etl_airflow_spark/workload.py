@@ -9914,8 +9914,6 @@ def join_autoplan_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
             left, right, ["k"],
             broadcast_max_rows=bcast_max,
             target_rows_per_task=256,
-            skew_share=0.2,
-            max_salts=64,
         )
         # "big" side mirrors the planner's tie rule: left wins ties
         big = (
@@ -10303,10 +10301,7 @@ def join_autoplan_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             left, right, ["k"],
             broadcast_max_rows=bcast_max,
             target_rows_per_task=256,
-            skew_share=0.2,
-            max_salts=64,
             stats_mode="sketch",
-            mg_capacity=16384,
         )
         big = (
             dec["left"]
@@ -11286,16 +11281,16 @@ def join_chain_autoplan(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem filtered to quantity 1, the shrunken fact edge wins and
     the order flips. actual_rows (identical across steps and
     plan-order-invariant) proves each chosen order computes the same
-    join. Scale: the pre-flight costs two degree joins + three counts
-    — the insurance against materializing a two-fact intermediate
-    orders of magnitude over the result. The oracle routes the edge
-    product through HUGEINT (ADVICE r11); engine-side the planner
-    est is arbitrary-precision Python int, pinned to bigint only at
-    the literal-row boundary — the QUOTIENT fits int64 for any
-    plausible scale even where the raw product would not. NOTE:
-    registered after the r11 verify head (rotation-slot rule);
-    parity-proven locally at sf0.001 + sf0.01; heads the r12
-    rotation."""
+    join. Scale: the pre-flight costs two edge profiles (each one full
+    outer join of two degree tables) — the insurance against
+    materializing a two-fact intermediate orders of magnitude over
+    the result. The oracle routes the edge product through HUGEINT
+    (ADVICE r11); engine-side the planner est is arbitrary-precision
+    Python int, pinned to bigint only at the literal-row boundary —
+    the QUOTIENT fits int64 for any plausible scale even where the raw
+    product would not. NOTE: registered after the r11 verify head
+    (rotation-slot rule); parity-proven locally at sf0.001 + sf0.01;
+    heads the r12 rotation."""
     from evidence_images_etl_airflow_spark.operators.joins import (
         plan_join_chain,
     )
@@ -11462,30 +11457,29 @@ def ep5_mart_chain_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from operators/joins.plan_join_chain (System-R greedy over exact
     edge cardinalities — it correctly builds customer*nation →
     +orders → +lineitem, dims first, the fact LAST) and each step's
-    PHYSICAL strategy from operators/skew.plan_equi_join(
-    lazy_stats=True) — ep4 dogfoods only the physical layer; this is
-    the first registered pipeline running the full two-level stack.
-    broadcast_max_rows=100_000 is the realistic dial: at bench scale
-    the dim steps broadcast the right side while the final
-    dims-vs-lineitem step flips to BROADCAST_LEFT (the accumulated
-    15k-row dim frame ships to the 600k-row fact's partitions) —
-    exactly the 100 TB shape, where the fact side is never collected,
-    shuffled, or pre-scanned (lazy_stats skips its pre-flight when the
-    opposite side already fits). Revenue sums go through
-    DECIMAL(18,2) products (exact, order-independent) and cast to
-    DOUBLE once at the end — the q1/q5 money idiom. Pre-flight cost:
-    three exact edge aggregations at distinct-key cardinality + four
-    counts + one small-side stats agg per step — the insurance that a
+    PHYSICAL strategy from operators/skew.plan_equi_join's decision
+    rule, fed from the chain's edge profiles — ep4 dogfoods only the
+    physical layer; this is the first registered pipeline running the
+    full two-level stack. broadcast_max_rows=100_000 is the realistic
+    dial: up to sf0.01 every step broadcasts its right side; at sf0.1
+    orders (150k rows) and lineitem (600k) exceed it, so the 15k-row
+    customer*nation frame broadcasts LEFT into orders and the
+    150k-row intermediate meets lineitem in a plain shuffle join. A
+    left side's statistics are read only when the right side misses
+    the budget, so a fact on the left is never pre-scanned. Revenue
+    sums go through DECIMAL(18,2) products (exact, order-independent)
+    and cast to DOUBLE once at the end — the q1/q5 money idiom.
+    Pre-flight cost: three edge profiles (each one full outer join of
+    two degree tables at distinct-key cardinality) + one stats agg
+    per intermediate left side that is read — the insurance that a
     mis-ordered two-fact intermediate never materializes. The chosen
     order and per-step strategies are asserted in
-    tests/test_pipeline.py. NOTE: registered after the r12 verify head
-    (rotation-slot rule); parity-proven locally at sf0.001 + sf0.01;
-    leads the r13 rotation behind the 6 spilled r08-cohort entries."""
+    tests/test_scale_patterns.py. NOTE: registered after the r12
+    verify head (rotation-slot rule); parity-proven locally at sf0.001
+    + sf0.01; leads the r13 rotation behind the 6 spilled r08-cohort
+    entries."""
     from evidence_images_etl_airflow_spark.operators.joins import (
         plan_join_chain,
-    )
-    from evidence_images_etl_airflow_spark.operators.skew import (
-        plan_equi_join,
     )
 
     one = F.lit(1).cast("decimal(18,2)")
@@ -11503,12 +11497,6 @@ def ep5_mart_chain_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("nk"), F.col("n_name").alias("nation")
     )
 
-    def _step(left: DataFrame, right: DataFrame, key: str):
-        return plan_equi_join(
-            left, right, [key], lazy_stats=True,
-            broadcast_max_rows=100_000,
-        )
-
     joined, _chain_dec = plan_join_chain(
         {"lineitem": li, "orders": orders, "customer": cust, "nation": nat},
         [
@@ -11516,7 +11504,7 @@ def ep5_mart_chain_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("orders", "customer", "ck"),
             ("customer", "nation", "nk"),
         ],
-        step_joiner=_step,
+        broadcast_max_rows=100_000,
     )
     return (
         joined.groupBy("nation")

@@ -248,8 +248,8 @@ def test_plan_join_chain_orders_by_estimates(spark):
 
 
 def test_plan_join_chain_preflight_runs_in_callers_job_group(spark, jobs_in_group):
-    """The concurrent edge pricings and row counts of a 3-table chain
-    all run in the caller's job group."""
+    """The concurrent edge profiles of a 3-table chain all run in the
+    caller's job group."""
     from evidence_images_etl_airflow_spark.operators.joins import (
         plan_join_chain,
     )
@@ -316,17 +316,13 @@ def test_plan_join_chain_validates_shape(spark):
 
 def test_plan_join_chain_composes_with_plan_equi_join(spark):
     """r11: ORDER planning (plan_join_chain) composes with per-step
-    PHYSICAL planning (plan_equi_join) via step_joiner — each step's
-    strategy decision is surfaced, and the result is unchanged."""
-    import functools
-
+    PHYSICAL planning (plan_equi_join's decision rule under
+    broadcast_max_rows) — each step's strategy decision is surfaced,
+    and the result is unchanged."""
     from pyspark.sql import functions as F
 
     from evidence_images_etl_airflow_spark.operators.joins import (
         plan_join_chain,
-    )
-    from evidence_images_etl_airflow_spark.operators.skew import (
-        plan_equi_join,
     )
 
     fact = spark.range(1000).select((F.col("id") % 10).alias("k1"))
@@ -335,15 +331,10 @@ def test_plan_join_chain_composes_with_plan_equi_join(spark):
     )
     dim = spark.range(2).select(F.col("id").alias("k2"))
 
-    step = functools.partial(plan_equi_join, how="inner")
-
-    def joiner(left, right, key):
-        return step(left, right, [key])
-
     joined, dec = plan_join_chain(
         {"fact": fact, "bridge": bridge, "dim": dim},
         [("fact", "bridge", "k1"), ("bridge", "dim", "k2")],
-        step_joiner=joiner,
+        broadcast_max_rows=1_000_000,
     )
     assert dec["order"] == ["bridge*dim", "fact*bridge"]
     assert [d["strategy"] for d in dec["step_decisions"]] == [
@@ -351,6 +342,64 @@ def test_plan_join_chain_composes_with_plan_equi_join(spark):
     ]
     assert joined.count() == 1000
     assert joined.columns == ["k1", "k2"]
+
+
+def test_plan_join_chain_stats_count_null_and_unmatched_keys(spark):
+    """The edge profiles are the chain's only measurement: a table's
+    n_rows is its degree sum on an edge, and each step's right-side
+    statistics come from the profile. Both must count NULL-key and
+    unmatched-key rows exactly as ``df.count()`` and ``_key_stats``
+    do, although neither kind of row joins."""
+    from evidence_images_etl_airflow_spark.operators.joins import (
+        plan_join_chain,
+    )
+    from evidence_images_etl_airflow_spark.operators.skew import _key_stats
+
+    # a: 5 NULL-key rows, keys 0..9 three times each, keys 100..103
+    # unmatched in b; b: keys 0..4, key 0 twice, 2 NULL-key rows, key 50
+    # unmatched in a; c hangs off b on j, with a NULL j and unmatched j
+    a = spark.createDataFrame(
+        [(None, i) for i in range(5)]
+        + [(i % 10, 10 + i) for i in range(30)]
+        + [(100 + i, 50 + i) for i in range(4)],
+        "k long, av long",
+    )
+    b = spark.createDataFrame(
+        [(0, 0), (0, 1), (1, 1), (2, None), (3, 3), (4, 4),
+         (None, 0), (None, 9), (50, 7)],
+        "k long, j long",
+    )
+    c = spark.createDataFrame(
+        [(0, "x"), (1, "y"), (1, "z"), (None, "n"), (8, "u")],
+        "j long, cv string",
+    )
+    tables = {"a": a, "b": b, "c": c}
+    joined, dec = plan_join_chain(
+        tables, [("a", "b", "k"), ("b", "c", "j")], broadcast_max_rows=3
+    )
+
+    assert dec["n_rows"] == {t: df.count() for t, df in tables.items()}
+    # a's keys 0..4 (3 rows each) meet b's 0 (twice), 1, 2, 3, 4, and
+    # b's j 0 (twice) and 1 (twice) meet c's 0 and 1 (twice); NULL and
+    # unmatched keys add nothing
+    assert dec["edge_rows"] == {
+        "a*b": a.join(b, "k").count(), "b*c": b.join(c, "j").count(),
+    } == {"a*b": 18, "b*c": 6}
+    assert dec["order"] == ["b*c", "a*b"]
+
+    def stats(df, key):
+        s = _key_stats(df, [key])
+        return {"n_rows": s.n_rows, "n_keys": s.n_keys, "max_degree": s.max_degree}
+
+    first, second = dec["step_decisions"]
+    # every right side is over the budget of 3, so each step also
+    # reads its left side: the profiled base table b, then the
+    # measured b*c intermediate
+    assert first["right"] == stats(c, "j")
+    assert first["left"] == stats(b, "j")
+    assert second["right"] == stats(a, "k")
+    assert second["left"] == stats(b.join(c, "j"), "k")
+    assert joined.count() == a.join(b, "k").join(c, "j").count()
 
 
 def test_plan_join_chain_four_table_star(spark):

@@ -210,7 +210,7 @@ def test_plan_equi_join_strategy_flips_on_skew(spark):
     the salt factor derived from the hot key's degree, not guessed."""
     from evidence_images_etl_airflow_spark.operators.skew import plan_equi_join
 
-    kw = dict(broadcast_max_rows=100, target_rows_per_task=500, skew_share=0.2)
+    kw = dict(broadcast_max_rows=100, target_rows_per_task=500)
 
     dim = spark.range(50).select(F.col("id").alias("k"), F.lit("d").alias("attr"))
     uniform = spark.range(5_000).select(
@@ -250,7 +250,7 @@ def test_plan_equi_join_right_skew_inner_flips_sides(spark):
     put the skewed side on the right of a LEFT join)."""
     from evidence_images_etl_airflow_spark.operators.skew import plan_equi_join
 
-    kw = dict(broadcast_max_rows=10, target_rows_per_task=100, skew_share=0.2)
+    kw = dict(broadcast_max_rows=10, target_rows_per_task=100)
     small = spark.range(400).select((F.col("id") % 50).alias("k"), F.col("id").alias("a"))
     hot = spark.range(3_000).select(
         F.when(F.col("id") < 2_000, F.lit(1)).otherwise(F.col("id") % 50).alias("k"),
@@ -273,7 +273,7 @@ def test_plan_equi_join_unsupported_skew_shapes_fall_through(spark):
     what Spark can actually build for the join type."""
     from evidence_images_etl_airflow_spark.operators.skew import plan_equi_join
 
-    kw = dict(broadcast_max_rows=100, target_rows_per_task=500, skew_share=0.2)
+    kw = dict(broadcast_max_rows=100, target_rows_per_task=500)
     skewed = spark.range(5_000).select(
         F.when(F.col("id") < 3_000, F.lit(7)).otherwise(F.col("id")).alias("k"),
         F.col("id").alias("rowid"),
@@ -400,7 +400,7 @@ def test_plan_equi_join_salted_accepts_spark_spellings(spark):
     pipeline. The normalized type must be forwarded."""
     from evidence_images_etl_airflow_spark.operators.skew import plan_equi_join
 
-    kw = dict(broadcast_max_rows=100, target_rows_per_task=500, skew_share=0.2)
+    kw = dict(broadcast_max_rows=100, target_rows_per_task=500)
     skewed = spark.range(5_000).select(
         F.when(F.col("id") < 3_000, F.lit(7)).otherwise(F.col("id")).alias("k"),
         F.col("id").alias("rowid"),
@@ -451,7 +451,7 @@ def test_plan_equi_join_sketch_stats_mode(spark):
         plan_equi_join,
     )
 
-    kw = dict(broadcast_max_rows=100, target_rows_per_task=500, skew_share=0.2)
+    kw = dict(broadcast_max_rows=100, target_rows_per_task=500)
     skewed = spark.range(5_000).select(
         F.when(F.col("id") < 3_000, F.lit(7)).otherwise(F.col("id")).alias("k"),
         F.col("id").alias("rowid"),
@@ -461,7 +461,7 @@ def test_plan_equi_join_sketch_stats_mode(spark):
     )
     # ample capacity: identical decision + identical derived salt count
     _, ds = plan_equi_join(
-        skewed, other, ["k"], stats_mode="sketch", mg_capacity=8192, **kw
+        skewed, other, ["k"], stats_mode="sketch", **kw
     )
     _, de = plan_equi_join(skewed, other, ["k"], stats_mode="exact", **kw)
     assert ds["stats_mode"] == "sketch"
@@ -474,7 +474,7 @@ def test_plan_equi_join_sketch_stats_mode(spark):
         (F.col("id") % 1000).alias("k"), F.col("id").alias("rowid")
     )
     _, du = plan_equi_join(
-        uniform, other, ["k"], stats_mode="sketch", mg_capacity=8192, **kw
+        uniform, other, ["k"], stats_mode="sketch", **kw
     )
     assert du["strategy"] == "shuffle"
 
@@ -708,21 +708,8 @@ def test_ep5_mart_runs_full_two_level_planner(spark):
     assert len(rows) == 25 and all(r.revenue > 0 for r in rows)
 
 
-def test_ep5_chain_decision_order_and_strategies(spark):
-    """The decision behind ep5, asserted explicitly: the System-R
-    greedy builds customer*nation -> +orders -> +lineitem (dims first,
-    fact LAST), and under a tight broadcast budget the final
-    dims-vs-fact step flips to BROADCAST_LEFT — the accumulated dim
-    frame ships to the fact's partitions, the 100 TB shape."""
-    import functools
-
-    from evidence_images_etl_airflow_spark.operators.joins import (
-        plan_join_chain,
-    )
-    from evidence_images_etl_airflow_spark.operators.skew import (
-        plan_equi_join,
-    )
-
+def _ep5_chain(spark):
+    """ep5's four tables and three edges at sf0.001."""
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         F.col("l_orderkey").alias("ok"))
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
@@ -735,14 +722,23 @@ def test_ep5_chain_decision_order_and_strategies(spark):
               "nation": nat}
     edges = [("lineitem", "orders", "ok"), ("orders", "customer", "ck"),
              ("customer", "nation", "nk")]
+    return tables, edges
 
-    def step(budget, left, right, key):
-        return plan_equi_join(left, right, [key], lazy_stats=True,
-                              broadcast_max_rows=budget)
+
+def test_ep5_chain_decision_order_and_strategies(spark):
+    """The decision behind ep5, asserted explicitly: the System-R
+    greedy builds customer*nation -> +orders -> +lineitem (dims first,
+    fact LAST), and under a tight broadcast budget the final
+    dims-vs-fact step flips to BROADCAST_LEFT — the accumulated dim
+    frame ships to the fact's partitions, the 100 TB shape."""
+    from evidence_images_etl_airflow_spark.operators.joins import (
+        plan_join_chain,
+    )
+
+    tables, edges = _ep5_chain(spark)
 
     # ep5's dial (100k): every right side fits at sf0.001
-    joined, dec = plan_join_chain(
-        tables, edges, step_joiner=functools.partial(step, 100_000))
+    joined, dec = plan_join_chain(tables, edges, broadcast_max_rows=100_000)
     assert dec["order"] == [
         "customer*nation", "orders*customer", "lineitem*orders"]
     assert dec["edge_rows"] == {
@@ -756,10 +752,39 @@ def test_ep5_chain_decision_order_and_strategies(spark):
 
     # tight budget (2000): lineitem (6000) no longer fits, the
     # 1500-row accumulated dim frame broadcasts LEFT instead
-    _, dec2 = plan_join_chain(
-        tables, edges, step_joiner=functools.partial(step, 2000))
+    _, dec2 = plan_join_chain(tables, edges, broadcast_max_rows=2000)
     assert [d["strategy"] for d in dec2["step_decisions"]] == [
         "broadcast_right", "broadcast_right", "broadcast_left"]
+    assert dec2["step_decisions"][2]["left"]["n_rows"] == 1500
+
+
+def test_ep5_chain_measures_only_intermediate_left_sides(spark, monkeypatch):
+    """The edge profiles hold every base table's statistics, so the
+    chain runs no per-step stats job of its own except for an
+    intermediate left side, and for that only when the step's right
+    side misses the broadcast budget."""
+    from evidence_images_etl_airflow_spark.operators import skew
+    from evidence_images_etl_airflow_spark.operators.joins import (
+        plan_join_chain,
+    )
+
+    calls = []
+    key_stats = skew._key_stats
+
+    def recording(df, on):
+        calls.append((sorted(df.columns), list(on)))
+        return key_stats(df, on)
+
+    monkeypatch.setattr(skew, "_key_stats", recording)
+    tables, edges = _ep5_chain(spark)
+
+    plan_join_chain(tables, edges, broadcast_max_rows=100_000)
+    assert calls == []
+
+    # budget 2000: only lineitem (step 3's right side) misses it, so
+    # only the customer*nation*orders intermediate is measured
+    _, dec2 = plan_join_chain(tables, edges, broadcast_max_rows=2000)
+    assert calls == [(["ck", "nk", "ok"], ["ok"])]
     assert dec2["step_decisions"][2]["left"]["n_rows"] == 1500
 
 
