@@ -10,10 +10,10 @@ tables until eviction pressure. Two release tiers:
   recomputation.
 - ``release_all(spark, hard=True)`` — additionally drop ALL persistent
   RDDs in the session via the JVM, which is the only way to free
-  ``localCheckpoint`` blocks (connected_components truncates lineage
-  with them; a checkpointed plan cannot be rebuilt, so this tier is for
-  session owners at a query boundary, not for library callers holding
-  live handles).
+  ``localCheckpoint`` blocks (connected_components, pagerank and
+  bpe_train truncate lineage with them; a checkpointed plan cannot be
+  rebuilt, so this tier is for session owners at a query boundary, not
+  for library callers holding live handles).
 
 The workload registry wraps every query so each invocation hard-releases
 the previous query's leftovers — the sweep-level leak the round-1

@@ -83,7 +83,7 @@ def bpe_train(
     pair maximizes weighted count with ties broken by (pair_a, pair_b)
     ascending."""
     spark = docs.sparkSession
-    words = _word_seqs(docs, text_col).localCheckpoint(eager=True)
+    words = _word_seqs(docs, text_col).localCheckpoint(eager=False)
     merges: list[tuple[int, str, str, str, int]] = []
     for r in range(1, n_merges + 1):
         best = (
@@ -101,7 +101,7 @@ def bpe_train(
                 F.col("seq"), F.lit(f" {pa} {pb} "), F.lit(f" {pa}{pb} ")
             ).alias("seq"),
             "freq",
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
     return merges
 
 

@@ -929,103 +929,19 @@ def routed_duplicate_clusters(
 
 # --- duplicate clusters (connected components) -------------------------------
 
-# Rounds used by the most recent connected_components call — exposed so
-# tests and SCALING.md can compare convergence of the two algorithms.
-last_cc_rounds: int = 0
-
 
 def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-    algorithm: str = "label_prop",
+    pairs: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 50
 ) -> DataFrame:
     """(node, component): connected components over an undirected pair
     list — the final step of every near-dup pipeline, turning pairwise
     matches into duplicate *clusters* keyed by the smallest member id
     (the canonical survivor).
 
-    Two interchangeable algorithms (identical results):
-
-    - ``label_prop`` (default): iterative min-label propagation — each
-      round every node takes the min of its own label and its
-      neighbors'; converges in O(component diameter) rounds. Near-dup
-      clusters are shallow, so this is the right default: a handful of
-      cheap join+groupBy rounds.
-    - ``two_phase``: alternating large-star/small-star (Kiveris et
-      al., "Connected Components in MapReduce and Beyond", 2014) —
-      each round rewires strictly-larger neighbors (large-star) then
-      smaller neighbors (small-star) onto the local minimum, halving
-      component height per round: O(log diameter) rounds. The scale
-      path when a 100 TB dup graph can contain one giant, DEEP
-      component (e.g. chained near-dups), where label propagation
-      would need O(diameter) full-shuffle rounds (measured on a
-      256-node path graph: 9 two-phase rounds vs >50 label-prop —
-      see SCALING.md).
-
-    Each round is a bounded number of shuffles, all JVM-side;
-    ``localCheckpoint`` truncates the plan so lineage doesn't grow
-    with iterations. ``last_cc_rounds`` reports the rounds the last
-    call used. Raises ``RuntimeError`` when ``max_iter`` rounds end
-    before convergence: the labels would be partial clusters.
-    """
-    if algorithm == "two_phase":
-        return _cc_two_phase(pairs, src, dst, max_iter)
-    if algorithm != "label_prop":
-        raise ValueError(f"unknown connected-components algorithm: {algorithm!r}")
-    e = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    edges = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "lbl", F.col("node")
-    )
-    global last_cc_rounds
-    lbl_type = dict(labels.dtypes)["lbl"]
-    for i in range(max_iter):
-        msgs = edges.join(labels, edges.src == labels.node).select(
-            F.col("dst").alias("node"), "lbl"
-        )
-        # One job per round instead of three (r17, guide §2.6): the
-        # previous label rides through the min-aggregate as ``__old``
-        # (every node appears exactly once in ``labels``, so max() over
-        # the union — null for neighbor messages — recovers it exactly),
-        # replacing the new-vs-old join; the checkpoint is LAZY (the
-        # logical plan is truncated to an RDD scan either way — eager
-        # only adds a materialization job) so the changed-count action
-        # below materializes it and counts in the same job.
-        new_labels = (
-            labels.select("node", "lbl", F.col("lbl").alias("__old"))
-            .unionByName(
-                msgs.withColumn("__old", F.lit(None).cast(lbl_type))
-            )
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"), F.max("__old").alias("__old"))
-        ).localCheckpoint(eager=False)
-        changed = new_labels.filter(F.col("lbl") != F.col("__old")).count()
-        labels = new_labels.select("node", "lbl")
-        if changed == 0:
-            last_cc_rounds = i + 1
-            break
-    else:
-        edges.unpersist()
-        raise RuntimeError(
-            f"label_prop connected components did not converge in {max_iter} "
-            "rounds (one round per hop of the deepest component); use "
-            'algorithm="two_phase", which needs O(log diameter) rounds'
-        )
-    edges.unpersist()
-    return labels.select("node", F.col("lbl").alias("component"))
-
-
-def _cc_two_phase(
-    pairs: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al. 2014,
-    §3): repeatedly rewrite the edge list so every edge points at a
-    smaller node, converging to one star per component rooted at its
-    minimum. Per round:
+    Alternating large-star/small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", 2014, §3): the edge list is
+    rewritten until every edge points at a smaller node and forms one
+    star per component rooted at its minimum. Per round:
 
     - large-star: for every node u with neighborhood Γ(u) and local
       min m(u) = min(Γ(u) ∪ {u}), replace each edge to a STRICTLY
@@ -1033,28 +949,24 @@ def _cc_two_phase(
     - small-star: for every u with smaller-neighbors Γ<(u) ≠ ∅ and
       m = min(Γ<(u)), connect u and each v ∈ Γ<(u) to m.
 
-    Both phases keep every emitted edge (big, small)-oriented, so the
-    invariant a > b holds and convergence is a fixed point of the edge
-    set. Fixed points are detected DIRECTLY on each round's output
-    (r17, guide §2.6 — cut driver round-trips): a (big, small)-oriented
-    edge set is a fixed point of large-star/small-star iff it is a
-    union of stars, i.e. every node has at most one parent
-    (count == count_distinct(a), folded into the round's existing
-    count job) and no parent is itself a child (an empty b ∩ a
-    semi-join, one tiny probe run only when the functional test
-    passes). The previous output-equals-input check (count + exceptAll
-    against the prior round) could only observe stability one full
-    round LATE — every call paid an entire confirming round of ~5
-    shuffles just to watch nothing change. Component height halves per
-    round: O(log diameter) rounds of a constant number of shuffles
-    each."""
-    global last_cc_rounds
-    # LAZY checkpoints throughout (r17, guide §2.6): localCheckpoint
-    # truncates the logical plan to an RDD scan in both modes — eager
-    # mode only adds a dedicated materialization job. Counting the
-    # lazily-checkpointed frame materializes it AND returns the count
-    # in ONE job, so each round costs one job (plus the exceptAll
-    # fixed-point probe only in the round whose count matches).
+    Component height halves per round, so a component of diameter d
+    needs O(log d) rounds (a 256-node path converges in 8; min-label
+    propagation would need one round per hop). Each phase takes its
+    neighborhood minimum with a window over ``a``, one shuffle.
+    Large-star rows satisfy v > u ≥ m(u), so they need no self-loop
+    filter, and small-star's ``distinct()`` absorbs their
+    duplicates. Every emitted edge is (big, small), so
+    the fixed point is reached iff the edge set is a union of stars:
+    no node has two parents and no parent is itself a child. One
+    aggregation over the round's endpoints tests that AND materializes
+    the round's lazy ``localCheckpoint`` (which truncates the plan so
+    lineage does not grow with rounds).
+
+    String ids work (components are the lexicographic minimum). A node
+    seen only in self-pairs carries no connectivity and is dropped.
+    Raises ``RuntimeError`` when ``max_iter`` rounds end before
+    convergence: the labels would be partial clusters.
+    """
     edges = (
         pairs.select(
             F.greatest(F.col(src), F.col(dst)).alias("a"),
@@ -1064,60 +976,58 @@ def _cc_two_phase(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    for i in range(max_iter):
-        # symmetrize once per round: both endpoints need Γ(u)
+    by_a = Window.partitionBy("a")
+    for _ in range(max_iter):
+        # large-star over the symmetrized edges: both endpoints need Γ(u)
         nb = edges.unionByName(
             edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
-        # large-star
-        lmin = (
-            nb.groupBy("a")
-            .agg(F.min("b").alias("__mb"))
-            .select("a", F.least("a", "__mb").alias("m"))
-        )
         large = (
-            nb.join(lmin, "a")
+            nb.withColumn("m", F.least("a", F.min("b").over(by_a)))
             .filter(F.col("b") > F.col("a"))
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
         )
-        # small-star over the large-star output (symmetrized)
-        snb = large.unionByName(
-            large.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).filter(F.col("b") < F.col("a"))
-        smin = snb.groupBy("a").agg(F.min("b").alias("m"))
+        # small-star over the large-star output's smaller neighbors
+        snb = (
+            large.unionByName(
+                large.select(F.col("b").alias("a"), F.col("a").alias("b"))
+            )
+            .filter(F.col("b") < F.col("a"))
+            .withColumn("m", F.min("b").over(by_a))
+        )
         small = (
-            snb.join(smin, "a")
-            .select(F.col("b").alias("v"), F.col("m"))
-            .unionByName(smin.select(F.col("a").alias("v"), F.col("m")))
+            snb.select(F.col("b").alias("v"), "m")
+            .unionByName(snb.select(F.col("a").alias("v"), "m"))
             .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
             .distinct()
             .localCheckpoint(eager=False)
         )
-        # one job: materialize the (lazy) checkpoint AND compute both
-        # star-test statistics — |small| and |distinct parents|
-        row = small.agg(
-            F.count("*").alias("__n"), F.count_distinct("a").alias("__na")
-        ).first()
-        stable = row["__n"] == row["__na"] and (
-            small.join(
-                small.select(F.col("a").alias("b")), "b", "left_semi"
-            )
-            .limit(1)
-            .count()
-            == 0
-        )
         edges = small
-        if stable:
-            last_cc_rounds = i + 1
+        # star test: per endpoint, (times it is a child, is it a parent)
+        unstable = (
+            small.select(
+                F.inline(
+                    F.array(
+                        F.struct(F.col("a").alias("n"), F.lit(1).alias("c"),
+                                 F.lit(0).alias("p")),
+                        F.struct(F.col("b").alias("n"), F.lit(0).alias("c"),
+                                 F.lit(1).alias("p")),
+                    )
+                )
+            )
+            .groupBy("n")
+            .agg(F.sum("c").alias("c"), F.max("p").alias("p"))
+            .filter((F.col("c") > 1) | ((F.col("c") > 0) & (F.col("p") > 0)))
+            .count()
+        )
+        if unstable == 0:
             break
     else:
         raise RuntimeError(
-            f"two_phase connected components did not converge in {max_iter} "
-            "rounds (about log2 of the deepest component's diameter are "
-            "needed); raise max_iter"
+            f"connected components did not converge in {max_iter} rounds "
+            "(about log2 of the deepest component's diameter are needed); "
+            "raise max_iter"
         )
     # star edges are (member, root); roots label themselves
     return (

@@ -1,5 +1,5 @@
-"""Iterative graph algorithms on DataFrames (beyond the label
-propagation in operators/dedup.connected_components): PageRank by
+"""Iterative graph algorithms on DataFrames (beyond the large-star/
+small-star loop in operators/dedup.connected_components): PageRank by
 power iteration.
 
 Scale shape per iteration: one join of the rank vector to the
@@ -8,8 +8,9 @@ rank vector is small it is broadcast, so the (big, cached) edge list
 never re-shuffles across iterations and the destination agg is a
 map-side combine onto |nodes| keys; past the broadcast threshold the
 join falls back to a shuffle on the node key. Iteration state is
-localCheckpoint-ed EAGERLY — persist alone caches data but leaves
-the logical plan growing two joins per round, so analyzer/AQE
+localCheckpoint-ed LAZILY (the next round's action materializes it):
+persist alone caches data but leaves the logical plan growing two
+joins per round, so analyzer/AQE
 planning cost compounds per iteration (measured 16.7s for 5
 iterations at sf0.1 before truncation, ~2s after); checkpointing
 replaces the plan with the materialized partitions. Same discipline

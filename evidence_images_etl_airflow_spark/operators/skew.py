@@ -88,20 +88,6 @@ def _side_aggs(d: str) -> list:
     ]
 
 
-def key_skew_profile(df: DataFrame, keys: Sequence[str], top: int = 10) -> DataFrame:
-    """Diagnostic: per-key row counts for the heaviest keys plus their
-    share of the table — how you decide whether to salt, and with how
-    many salts (aim: hottest_key_rows / num_salts <= rows_per_partition
-    budget)."""
-    total = df.count()
-    return (
-        _degrees(df, keys, "n_rows")
-        .withColumn("share", F.round(F.col("n_rows") / F.lit(total), 6))
-        .orderBy(F.col("n_rows").desc(), *keys)
-        .limit(top)
-    )
-
-
 class _KeyStats(NamedTuple):
     """A join side's degree statistics on its key. ``n_keys`` is None
     and ``err_bound`` positive only for a compressed sketch."""

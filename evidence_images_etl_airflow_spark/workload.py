@@ -4199,8 +4199,8 @@ def _cc_oracle() -> str:
     """Duplicate clusters = connected components over the verified
     MinHash pair list, labels = min reachable doc_id. The recursive CTE
     computes full reachability (finite: distinct (node, lbl) pairs),
-    then min per node — the declarative mirror of the engine's
-    label-propagation loop."""
+    then min per node: the same labels the engine's large-star/
+    small-star loop converges to."""
     return f"""
     WITH RECURSIVE pairs AS ({_minhash_oracle()}),
     edges AS (
@@ -4798,9 +4798,9 @@ def ep3_training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages carry the blocked/banded costs documented in SCALING.md;
     curation is row-local; packing is per-shard windows — nothing
     global anywhere. r09 profiling (SCALING.md round-9 section)
-    re-attributed the 100x cost: clustering uses the two-phase
-    large-star/small-star CC (6.2 s vs 16.0 s label-prop at 500k
-    docs, identical labels), and (lang, quality) ride THROUGH the
+    re-attributed the 100x cost: clustering uses large-star/small-star
+    CC (6.2 s vs 16.0 s for min-label propagation at 500k docs,
+    identical labels), and (lang, quality) ride THROUGH the
     packing window via keep_cols instead of a join back to the
     survivor scan — which silently recomputed the pipeline's
     dominant 75 s quality-scoring pass a second time."""
@@ -4808,7 +4808,7 @@ def ep3_training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(
         d, "doc_id", "text", num_hashes=8, bands=4, shingle_n=3, verify_threshold=0.5
     )
-    comp = connected_components(pairs, algorithm="two_phase")
+    comp = connected_components(pairs)
     dropped = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )
@@ -5414,7 +5414,7 @@ def ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("dedup_minhash_clusters", oracle=_cc_oracle())
 def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs -> clusters: connected components (operators/dedup.py
-    label propagation) over the verified MinHash+LSH pair list, each
+    large-star/small-star) over the verified MinHash+LSH pair list, each
     doc labeled with its cluster's smallest doc_id. This is the step
     that makes dedup actionable — keep component representative, drop
     the rest."""
@@ -5423,25 +5423,6 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, "doc_id", "text", num_hashes=8, bands=4, shingle_n=3, verify_threshold=0.5
     )
     return connected_components(pairs).select(
-        F.col("node").alias("doc_id"), "component"
-    )
-
-
-@register("dedup_clusters_twophase", oracle=_cc_oracle())
-def dedup_clusters_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same pair list and same recursive-CTE oracle as
-    dedup_minhash_clusters, clustered with the SCALE algorithm:
-    large-star/small-star connected components (operators/dedup.py
-    `_cc_two_phase`, Kiveris et al. 2014) instead of label
-    propagation. O(log diameter) rounds vs O(diameter) — the variant
-    a 100 TB dup graph with one deep component needs; proving it on
-    the registry oracle keeps the two implementations pinned to
-    identical output."""
-    d = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", num_hashes=8, bands=4, shingle_n=3, verify_threshold=0.5
-    )
-    return connected_components(pairs, algorithm="two_phase").select(
         F.col("node").alias("doc_id"), "component"
     )
 
@@ -8837,7 +8818,7 @@ def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream hit ONE golden row per real entity. The oracle replays
     matching, recursive-CTE reachability clustering, AND every
     survivorship rule end-to-end. Scale: matching is block-bounded,
-    clustering is O(diameter) rounds on the match graph only, and the
+    clustering is O(log diameter) rounds on the match graph only, and the
     consolidation is per-rule single shuffles over cluster-tagged
     rows with rank-1 windows (WindowGroupLimit) — the cluster table
     broadcasts because it is canonicalized-names-sized, never
@@ -14482,7 +14463,7 @@ def ep3_pipeline_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, "doc_id", "text", num_hashes=8, bands=4, shingle_n=3,
         verify_threshold=0.5,
     )
-    comp = connected_components(pairs, algorithm="two_phase")
+    comp = connected_components(pairs)
     dropped = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )

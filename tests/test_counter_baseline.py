@@ -7,7 +7,7 @@ task therefore shows up here, in the change that makes it, and the
 baseline update is part of that change's diff.
 
 Each query runs once as a warm-up (one-time scratch builds: the cold
-``ep3_pipeline_curated`` run has 35 jobs against 33 warm), then once
+``ep3_pipeline_curated`` run has 25 jobs against 23 warm), then once
 counted, under a job group named after the query. Only stages that
 completed tasks count; a skipped stage (its shuffle output already
 exists) is listed by its job but runs nothing.

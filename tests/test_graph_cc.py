@@ -1,86 +1,96 @@
-"""Two-phase (large-star/small-star) connected components and the
-round-5 pagerank fixes: equivalence of the two CC algorithms,
-logarithmic round counts on deep components, and zero-in-degree node
-retention in pagerank (round-4 ADVICE)."""
+"""Large-star/small-star connected components against a pure-Python
+union-find (integer and string ids, self, duplicate and reversed
+pairs), their round bounds on deep components through ``max_iter``,
+and zero-in-degree node retention in pagerank (round-4 ADVICE)."""
 
 from __future__ import annotations
 
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
-from evidence_images_etl_airflow_spark.operators import dedup
 from evidence_images_etl_airflow_spark.operators.dedup import connected_components
 from evidence_images_etl_airflow_spark.operators.graph import pagerank
 
 
-def _components(spark, edges, algorithm, max_iter=50):
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    out = connected_components(df, algorithm=algorithm, max_iter=max_iter)
+def _components(spark, edges, max_iter=50, schema=("id_a", "id_b")):
+    df = spark.createDataFrame(edges, schema)
+    out = connected_components(df, max_iter=max_iter)
     return {r["node"]: r["component"] for r in out.collect()}
 
 
-def test_two_phase_matches_label_prop_random(spark):
-    rng = random.Random(7)
-    edges = [
-        (a, b)
-        for a, b in {
-            tuple(sorted(rng.sample(range(120), 2))) for _ in range(150)
-        }
-    ]
-    lp = _components(spark, edges, "label_prop")
-    tp = _components(spark, edges, "two_phase")
-    assert lp == tp
-    # every component label is the component's own minimum member
-    members: dict[int, list[int]] = {}
-    for node, comp in tp.items():
-        members.setdefault(comp, []).append(node)
-    for comp, nodes in members.items():
-        assert comp == min(nodes)
+def _union_find(edges):
+    """node -> smallest member of its component; a node seen only in
+    self-pairs is absent, as in connected_components."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def _messy_edges(rng, nodes, n_edges):
+    """Random pairs plus self-pairs, duplicates and reversed copies."""
+    edges = [tuple(rng.sample(nodes, 2)) for _ in range(n_edges)]
+    edges += [(n, n) for n in rng.sample(nodes, 5)]
+    edges += rng.sample(edges, 10)
+    edges += [(b, a) for a, b in rng.sample(edges, 10)]
+    rng.shuffle(edges)
+    return edges
+
+
+def test_components_match_union_find(spark):
+    for seed in (7, 8, 9):
+        edges = _messy_edges(random.Random(seed), list(range(120)), 110)
+        got = _components(spark, edges, schema="id_a long, id_b long")
+        assert got == _union_find(edges), seed
+
+
+def test_components_match_union_find_string_ids(spark):
+    # er_golden_record clusters p_name strings: labels are the
+    # lexicographic minimum, so "n10" < "n9"
+    rng = random.Random(17)
+    edges = _messy_edges(rng, [f"n{i}" for i in range(80)], 70)
+    got = _components(spark, edges, schema="id_a string, id_b string")
+    assert got == _union_find(edges)
 
 
 def test_two_phase_converges_logarithmically_on_path(spark):
-    # a 256-node path is the adversarial deep component: label prop
-    # would need ~255 rounds (O(diameter)), two-phase O(log diameter)
+    # a 256-node path is the adversarial deep component: label
+    # propagation would need ~255 rounds, large-star/small-star
+    # O(log diameter)
     edges = [(i, i + 1) for i in range(255)]
-    tp = _components(spark, edges, "two_phase", max_iter=20)
-    assert dedup.last_cc_rounds <= 12  # measured: 9
+    tp = _components(spark, edges, max_iter=12)
     assert set(tp.values()) == {0}
     assert len(tp) == 256
 
 
-def test_round_counts_diverge_on_deep_component(spark):
-    # small enough that label prop can actually finish: 32-node path
+def test_two_phase_converges_on_short_path(spark):
     edges = [(i, i + 1) for i in range(31)]
-    tp = _components(spark, edges, "two_phase", max_iter=20)
-    tp_rounds = dedup.last_cc_rounds
-    lp = _components(spark, edges, "label_prop", max_iter=50)
-    lp_rounds = dedup.last_cc_rounds
-    assert lp == tp
-    assert tp_rounds <= 8  # ~log2(31) + fixpoint check
-    assert lp_rounds >= 31  # one hop per round along the path
-
-
-# a 64-node path: label prop needs 63 hops, two-phase about 7 rounds
-_PATH64 = [(i, i + 1) for i in range(63)]
-
-
-def test_label_prop_raises_when_rounds_run_out(spark):
-    # used to return the 10-round partial labels: 54 "components"
-    with pytest.raises(RuntimeError, match=r'10 rounds.*algorithm="two_phase"'):
-        _components(spark, _PATH64, "label_prop", max_iter=10)
+    assert _components(spark, edges, max_iter=8) == {i: 0 for i in range(32)}
 
 
 def test_two_phase_raises_when_rounds_run_out(spark):
-    # used to return 119 (node, component) rows for 64 nodes
+    # the labels after 3 rounds would be partial clusters
     with pytest.raises(RuntimeError, match="3 rounds"):
-        _components(spark, _PATH64, "two_phase", max_iter=3)
+        _components(spark, [(i, i + 1) for i in range(255)], max_iter=3)
 
 
 def test_two_phase_multiple_components_and_self_pairs(spark):
     edges = [(1, 2), (2, 3), (10, 11), (20, 20), (30, 31), (31, 30)]
-    tp = _components(spark, edges, "two_phase")
+    tp = _components(spark, edges)
     assert tp[1] == tp[2] == tp[3] == 1
     assert tp[10] == tp[11] == 10
     assert tp[30] == tp[31] == 30

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from evidence_images_etl_airflow_spark.operators.skew import key_skew_profile, salted_join
+from evidence_images_etl_airflow_spark.operators.skew import salted_join
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -106,15 +106,6 @@ def test_salted_join_salt_is_retry_stable(spark):
         salted_join(
             base.select("k"), spark.createDataFrame([(1,)], "k long"), ["k"]
         )
-
-
-def test_key_skew_profile_ranks_hot_keys(spark):
-    df = spark.createDataFrame(
-        [(1,)] * 70 + [(2,)] * 20 + [(3,)] * 10, "k long"
-    )
-    prof = key_skew_profile(df, ["k"], top=2).collect()
-    assert [r.k for r in prof] == [1, 2]
-    assert prof[0].n_rows == 70 and abs(prof[0].share - 0.7) < 1e-9
 
 
 def test_hash_split_deterministic_and_proportional(spark):
