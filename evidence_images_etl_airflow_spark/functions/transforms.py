@@ -158,3 +158,22 @@ def fold_concat(cols: Iterable[str | Column], sep: str = " and ") -> Column:
     """``reduce(lambda x, y: x + ' and ' + y, ...)``
     (learn/taskflow_api_dag.py:44) -> ``concat_ws``."""
     return F.concat_ws(sep, *[F.col(c) if isinstance(c, str) else c for c in cols])
+
+
+def lit_rows(rows, schema: str) -> Column:
+    """Driver-side ``rows`` (tuples in the DDL ``schema``'s column order)
+    as one generator column to select over a 1-row frame such as
+    ``spark.range(0, 1, 1, 1)``. Unlike ``spark.createDataFrame(rows)``,
+    whose Python-backed scan runs one Python worker task per
+    default-parallelism slot, the rows are plan literals: no Python
+    worker runs."""
+    st = T._parse_datatype_string(schema)
+    return F.inline(
+        F.array(*[
+            F.struct(*[
+                F.lit(v).cast(f.dataType).alias(f.name)
+                for v, f in zip(row, st.fields)
+            ])
+            for row in rows
+        ]).cast(T.ArrayType(st))
+    )

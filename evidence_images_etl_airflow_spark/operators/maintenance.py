@@ -33,6 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from evidence_images_etl_airflow_spark.functions.transforms import lit_rows
 from evidence_images_etl_airflow_spark.sinks.writers import (
     hadoop_fs,
     read_bytes,
@@ -254,10 +255,10 @@ def execute_compaction(
                 f"{path!r} (hive-partitioned or nested layout) — compact "
                 "each partition directory separately"
             )
-    fmap = spark.createDataFrame(
+    fmap = spark.range(0, 1, 1, 1).select(lit_rows(
         [(r.group_id, r.file_path) for r in rows],
         "group_id bigint, __path string",
-    )
+    ))
     df = (
         spark.read.parquet(*paths)
         .withColumn("__path", F.col("_metadata.file_path"))

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from evidence_images_etl_airflow_spark.functions.text import tokens
+from evidence_images_etl_airflow_spark.functions.transforms import lit_rows
 from evidence_images_etl_airflow_spark.functions.vectors import cosine
 
 
@@ -462,8 +463,8 @@ def pr_threshold_sweep(
         (F.count(F.lit(1)) - F.sum("__y")).cast("bigint").alias("__nn"),
     )
     spark = df.sparkSession
-    grid = spark.createDataFrame(
-        [(float(t),) for t in thresholds], "threshold double"
+    grid = spark.range(0, 1, 1, 1).select(
+        lit_rows([(float(t),) for t in thresholds], "threshold double")
     )
     kept = F.col("__s") >= F.col("threshold")
     swept = (
@@ -707,10 +708,10 @@ def publish_score_table_versioned(
 
     cols = list(carry_cols or [])
     v = versioned.publish(spark, df.select(*cols, score.alias("score")), table)
-    meta = spark.createDataFrame(
+    meta = spark.range(0, 1, 1, 1).select(lit_rows(
         [(v, source_fingerprint)],
         "data_version int, source_fingerprint string",
-    )
+    ))
     versioned.publish(spark, meta, f"{table}__meta")
     return v
 

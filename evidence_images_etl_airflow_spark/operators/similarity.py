@@ -22,7 +22,7 @@ Scores fold in double precision (functions.vectors) and are rounded to
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from evidence_images_etl_airflow_spark.functions.partitioning import spread
@@ -31,6 +31,27 @@ from evidence_images_etl_airflow_spark.functions.vectors import (
     dot,
     hyperplane_signature,
 )
+
+
+def _rank_topk(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """Each query's top-k rows of ``scored`` by ``score`` descending,
+    ties to the smaller ``neighbor_id``, with their ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim, rank): exact top-k by cosine
+    over candidate ``(query_id, qvec, neighbor_id, cvec)`` pairs,
+    self-matches excluded."""
+    scored = pairs.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
+    )
+    return _rank_topk(scored, "cos_sim", k)
 
 
 def brute_force_topk(
@@ -48,22 +69,7 @@ def brute_force_topk(
     c = spread(corpus, F.col(id_col)).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_topk(c.crossJoin(F.broadcast(q)), k)
 
 
 def assign_cells(
@@ -163,25 +169,10 @@ def ivf_topk(
     operator itself fully deterministic and engine-reproducible."""
     cells = assign_cells(corpus, centroids, id_col, vec_col, centroid_id_col)
     probed = _probe_cells(queries, centroids, id_col, vec_col, centroid_id_col, nprobe)
-    scored = (
-        cells.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), "cell"
-        )
-        .join(F.broadcast(probed), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
-        )
+    c = cells.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), "cell"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_topk(c.join(F.broadcast(probed), "cell"), k)
 
 
 def build_ivf_index(
@@ -228,27 +219,25 @@ def ivf_topk_indexed(
     |queries| × nprobe (query batches are small by the operator's
     contract — they broadcast), which keeps the pruning static and
     visible in the plan rather than relying on runtime DPP."""
+    # imported here: sources imports operators, which imports this module
+    from evidence_images_etl_airflow_spark.sources.parquet_source import read_parquet
+
     probed = _probe_cells(queries, centroids, id_col, vec_col, centroid_id_col, nprobe)
     probe_cells = [r["cell"] for r in probed.select("cell").distinct().collect()]
-    index = spark.read.parquet(index_path).filter(F.col("cell").isin(probe_cells))
-    scored = (
-        index.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), "cell"
-        )
-        .join(F.broadcast(probed), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
-        )
+    index = read_parquet(spark, index_path).filter(F.col("cell").isin(probe_cells))
+    c = index.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), "cell"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _cosine_topk(c.join(F.broadcast(probed), "cell"), k)
+
+
+def _subspace_slices(df: DataFrame, key: Column, vec_col: str, m: int) -> DataFrame:
+    """(key, sub, __v, __slice): one row per subspace ``sub`` < m of each
+    vector ``__v`` of ``df``, with its ``sub``-th of m equal slices."""
+    width = (F.size("__v") / m).cast("int")
+    subs = F.explode(F.array(*[F.lit(s) for s in range(m)])).alias("sub")
+    return df.select(key, subs, F.col(vec_col).alias("__v")).withColumn(
+        "__slice", F.slice(F.col("__v"), (F.col("sub") * width + 1).cast("int"), width)
     )
 
 
@@ -265,18 +254,10 @@ def pq_codebooks_from_rows(
     centroids: production swaps in per-subspace k-means offline; a
     deterministic source keeps the operator engine-reproducible and
     oracle-checkable. One tiny driver-free plan — |m·n_codes| rows."""
-    base = corpus.filter(F.col(id_col) < n_codes).select(
-        F.col(id_col).alias("code"), F.col(vec_col).alias("__v")
+    base = corpus.filter(F.col(id_col) < n_codes)
+    return _subspace_slices(base, F.col(id_col).alias("code"), vec_col, m).select(
+        "sub", "code", F.col("__slice").alias("subvec")
     )
-    subs = F.explode(F.array(*[F.lit(s) for s in range(m)])).alias("sub")
-    return base.select("code", "__v", subs).withColumn(
-        "subvec",
-        F.slice(
-            F.col("__v"),
-            (F.col("sub") * (F.size("__v") / m).cast("int") + 1).cast("int"),
-            (F.size("__v") / m).cast("int"),
-        ),
-    ).select("sub", "code", "subvec")
 
 
 def pq_encode(
@@ -297,18 +278,7 @@ def pq_encode(
     one groupBy(id) shuffle of (id, sub, code) triples; materialize
     the result like ``build_ivf_index`` so search never re-encodes."""
     cb = F.broadcast(codebooks)
-    sliced = corpus.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array(*[F.lit(s) for s in range(m)])).alias("sub"),
-        F.col(vec_col).alias("__v"),
-    ).withColumn(
-        "__slice",
-        F.slice(
-            F.col("__v"),
-            (F.col("sub") * (F.size("__v") / m).cast("int") + 1).cast("int"),
-            (F.size("__v") / m).cast("int"),
-        ),
-    )
+    sliced = _subspace_slices(corpus, F.col(id_col).alias("id"), vec_col, m)
     scored = sliced.join(cb, "sub").select(
         "id",
         "sub",
@@ -359,31 +329,63 @@ def _adc_lookup_tables(
     derivation (slice bounds, rounding, tie order) cannot drift
     between the direct and indexed paths."""
     cb = F.broadcast(codebooks)
-    return (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-        )
-        .select(
-            "query_id",
-            F.explode(F.array(*[F.lit(s) for s in range(m)])).alias("sub"),
-            F.col("__qv"),
-        )
-        .withColumn(
-            "__qslice",
-            F.slice(
-                F.col("__qv"),
-                (F.col("sub") * (F.size("__qv") / m).cast("int") + 1).cast("int"),
-                (F.size("__qv") / m).cast("int"),
-            ),
-        )
-        .join(cb, "sub")
-        .select(
-            "query_id",
-            "sub",
-            "code",
-            F.round(dot(F.col("__qslice"), F.col("subvec")), 6).alias("__t"),
+    sliced = _subspace_slices(queries, F.col(id_col).alias("query_id"), vec_col, m)
+    return sliced.join(cb, "sub").select(
+        "query_id",
+        "sub",
+        "code",
+        F.round(dot(F.col("__slice"), F.col("subvec")), 6).alias("__t"),
+    )
+
+
+def _adc_topk(
+    cand: DataFrame,
+    queries: DataFrame,
+    codebooks: DataFrame,
+    id_col: str,
+    vec_col: str,
+    m: int,
+    k: int,
+) -> DataFrame:
+    """ADC-score candidate rows ``(id, code_0..code_{m-1}[, query_id])``
+    and cut each query's top-k -> (query_id, neighbor_id, approx_ip,
+    rank). The lookup tables are grouped into ONE broadcast row per
+    query holding m ``code -> __t`` maps (codes are unique per
+    subspace), joined on ``query_id``, or paired with every query when
+    the candidates carry none. A row whose code is NULL or has no entry
+    in its subspace's map is dropped, as an inner join on the code would
+    drop it; the m looked-up values sum in FIXED subspace order before
+    the 6dp round, so scores are engine-deterministic. Self-matches
+    are excluded; ties rank by ``neighbor_id``."""
+    dt = _adc_lookup_tables(queries, codebooks, id_col, vec_col, m)
+    tables = F.broadcast(
+        dt.groupBy("query_id").agg(
+            *[
+                F.map_from_entries(
+                    F.collect_list(
+                        F.when(F.col("sub") == s, F.struct("code", "__t"))
+                    )
+                ).alias(f"__m{s}")
+                for s in range(m)
+            ]
         )
     )
+    if "query_id" in cand.columns:
+        out = cand.join(tables, "query_id")
+    else:
+        out = cand.crossJoin(tables)
+    found = F.col("id") != F.col("query_id")
+    total = None
+    for s in range(m):
+        mp, code = F.col(f"__m{s}"), F.col(f"code_{s}")
+        found = found & F.map_contains_key(mp, code)
+        total = mp[code] if total is None else total + mp[code]
+    scored = out.filter(found).select(
+        "query_id",
+        F.col("id").alias("neighbor_id"),
+        F.round(total, 6).alias("approx_ip"),
+    )
+    return _rank_topk(scored, "approx_ip", k)
 
 
 def pq_adc_topk(
@@ -401,34 +403,12 @@ def pq_adc_topk(
     lookups summed in FIXED subspace order (engine-deterministic) —
     never a touch of the original vectors. Returns (query_id,
     neighbor_id, approx_ip, rank). At 100 TB: the codes table is the
-    only per-corpus-row input, each per-sub lookup is a broadcast hash
-    join on a tiny table, and the only shuffle is the per-query top-k
-    window. Compose with IVF cells to prune candidates first; re-rank
-    the survivors with exact cosine against the full vectors when
-    recall matters."""
-    dt = _adc_lookup_tables(queries, codebooks, id_col, vec_col, m)
-    out = codes
-    total = None
-    for s in range(m):
-        dts = F.broadcast(
-            dt.filter(F.col("sub") == s).select(
-                "query_id", F.col("code").alias(f"code_{s}"), F.col("__t").alias(f"__t{s}")
-            )
-        )
-        # first lookup fans corpus codes out per query; later lookups
-        # must stay within the same query's table
-        keys = [f"code_{s}"] if s == 0 else ["query_id", f"code_{s}"]
-        out = out.join(dts, keys)
-        total = F.col(f"__t{s}") if total is None else total + F.col(f"__t{s}")
-    scored = out.filter(F.col("id") != F.col("query_id")).select(
-        "query_id",
-        F.col("id").alias("neighbor_id"),
-        F.round(total, 6).alias("approx_ip"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_ip").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    only per-corpus-row input, the lookup tables ride ONE broadcast of
+    one row per query (m code -> score maps), and the only corpus-sized
+    shuffle is the per-query top-k window. Compose with IVF cells to
+    prune candidates first; re-rank the survivors with exact cosine
+    against the full vectors when recall matters."""
+    return _adc_topk(codes, queries, codebooks, id_col, vec_col, m, k)
 
 
 def ivf_pq_topk(
@@ -449,10 +429,10 @@ def ivf_pq_topk(
     not the vector). Corpus cost is the two one-time passes (cell
     assignment + PQ encode — materialize both in production, the codes
     join the cell layout); per query-batch cost is |probed cells'
-    rows| × m broadcast lookups + one top-k window. Same output shape
-    as the other tiers with ``approx_ip`` as the score; recall is the
-    nprobe × codebook-resolution dial pair, re-rank survivors with
-    exact cosine when it matters."""
+    rows| × m map lookups in one per-query broadcast + one top-k
+    window. Same output shape as the other tiers with ``approx_ip`` as
+    the score; recall is the nprobe × codebook-resolution dial pair,
+    re-rank survivors with exact cosine when it matters."""
     cells = assign_cells(corpus, centroids, id_col, vec_col, centroid_id_col)
     codes = pq_encode(corpus, codebooks, id_col, vec_col, m)
     probed = _probe_cells(queries, centroids, id_col, vec_col, centroid_id_col, nprobe)
@@ -462,26 +442,7 @@ def ivf_pq_topk(
         .filter(F.col("id") != F.col("query_id"))
         .select("query_id", "id")
     )
-    dt = _adc_lookup_tables(queries, codebooks, id_col, vec_col, m)
-    out = cand.join(codes, "id")
-    total = None
-    for s in range(m):
-        dts = F.broadcast(
-            dt.filter(F.col("sub") == s).select(
-                "query_id", F.col("code").alias(f"code_{s}"), F.col("__t").alias(f"__t{s}")
-            )
-        )
-        out = out.join(dts, ["query_id", f"code_{s}"])
-        total = F.col(f"__t{s}") if total is None else total + F.col(f"__t{s}")
-    scored = out.select(
-        "query_id",
-        F.col("id").alias("neighbor_id"),
-        F.round(total, 6).alias("approx_ip"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_ip").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _adc_topk(cand.join(codes, "id"), queries, codebooks, id_col, vec_col, m, k)
 
 
 def build_ivf_pq_index(
@@ -534,39 +495,23 @@ def ivf_pq_topk_indexed(
     amortized away: probe cells become a static partition filter on
     the codes scan (``cell IN (...)`` — same driver-side bounded
     collect as ``ivf_topk_indexed``, |queries| × nprobe cells), then
-    the ADC lookup joins score only the surviving code rows. At
-    100 TB the per-batch cost is probed-cell code bytes × m broadcast
-    lookups + one top-k window; the embeddings table is never
-    touched (re-rank survivors via ``rerank_exact`` when recall
-    matters)."""
+    the ADC lookup maps score only the surviving code rows. At
+    100 TB the per-batch cost is probed-cell code bytes × m map
+    lookups in one per-query broadcast + one top-k window; the
+    embeddings table is never touched (re-rank survivors via
+    ``rerank_exact`` when recall matters)."""
+    # imported here: sources imports operators, which imports this module
+    from evidence_images_etl_airflow_spark.sources.parquet_source import read_parquet
+
     probed = _probe_cells(queries, centroids, id_col, vec_col, centroid_id_col, nprobe)
     probe_cells = [r["cell"] for r in probed.select("cell").distinct().collect()]
-    index = spark.read.parquet(index_path).filter(F.col("cell").isin(probe_cells))
+    index = read_parquet(spark, index_path).filter(F.col("cell").isin(probe_cells))
     cand = (
         index.join(F.broadcast(probed.select("query_id", "cell")), "cell")
         .filter(F.col("id") != F.col("query_id"))
         .drop("cell", "qvec")
     )
-    dt = _adc_lookup_tables(queries, codebooks, id_col, vec_col, m)
-    out = cand
-    total = None
-    for s in range(m):
-        dts = F.broadcast(
-            dt.filter(F.col("sub") == s).select(
-                "query_id", F.col("code").alias(f"code_{s}"), F.col("__t").alias(f"__t{s}")
-            )
-        )
-        out = out.join(dts, ["query_id", f"code_{s}"])
-        total = F.col(f"__t{s}") if total is None else total + F.col(f"__t{s}")
-    scored = out.select(
-        "query_id",
-        F.col("id").alias("neighbor_id"),
-        F.round(total, 6).alias("approx_ip"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_ip").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _adc_topk(cand, queries, codebooks, id_col, vec_col, m, k)
 
 
 def rerank_exact(
@@ -601,10 +546,7 @@ def rerank_exact(
             F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored, "cos_sim", k)
 
 
 def matryoshka_truncate(
@@ -748,22 +690,7 @@ def lsh_topk(
     )
     q = sig(queries, "query_id", "qvec")
     c = sig(spread(corpus, F.col(id_col)), "neighbor_id", "cvec")
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_topk(c.join(F.broadcast(q), "bucket"), k)
 
 
 def retrieval_metrics(

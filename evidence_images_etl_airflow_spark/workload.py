@@ -45,6 +45,7 @@ from evidence_images_etl_airflow_spark.functions.transforms import (
     cast_all_to_string,
     coerce_bool_columns_to_int,
     first_element,
+    lit_rows,
     normalize_nat,
     qualify_urls,
     session_length_seconds,
@@ -124,6 +125,7 @@ from evidence_images_etl_airflow_spark.operators.upsert import (
     merge_upsert,
 )
 from evidence_images_etl_airflow_spark.session import parallel_actions
+from evidence_images_etl_airflow_spark.sources.parquet_source import read_parquet
 
 
 @dataclass
@@ -273,32 +275,24 @@ def register(name: str, oracle: str | None, headline: bool = False):
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Table ``name`` of ``sf_dir``. The schema is inferred once per file
+    version (``sources.parquet_source.read_parquet``): later reads reuse
+    it while the file's path, length and modification time are unchanged,
+    so they run no schema job."""
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+def _stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` as a streaming file source with ``_t``'s schema.
+    The file source wants a directory or a glob, not a bare file path;
+    the glob keeps the basePath at sf_dir."""
+    schema = _t(spark, sf_dir, name).schema
+    return spark.readStream.schema(schema).parquet(f"{sf_dir}/{name}.parque*")
 
 
 def _dec(col: str) -> F.Column:
     """Exact decimal view of a 2dp money column."""
     return F.col(col).cast("decimal(18,2)")
-
-
-def _lit_rows(rows, schema: str) -> F.Column:
-    """Driver-side ``rows`` (tuples in the DDL ``schema``'s column order)
-    as one generator column to select over a 1-row frame. Unlike
-    ``spark.createDataFrame(rows)``, whose Python-backed scan runs one
-    Python worker task per default-parallelism slot, the rows are plan
-    literals: no Python worker runs."""
-    from pyspark.sql.types import ArrayType, _parse_datatype_string
-
-    st = _parse_datatype_string(schema)
-    return F.inline(
-        F.array(*[
-            F.struct(*[
-                F.lit(v).cast(f.dataType).alias(f.name)
-                for v, f in zip(row, st.fields)
-            ])
-            for row in rows
-        ]).cast(ArrayType(st))
-    )
 
 
 # ===========================================================================
@@ -2717,8 +2711,7 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from evidence_images_etl_airflow_spark.streaming.stateful import sessionize_stateful
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
+    stream = _stream(spark, sf_dir, "events")
     stream = stream.withColumn("ts_us", _event_micros(stream))
     stream = stream.withColumn("ts_utc", F.timestamp_micros(F.col("ts_us")))
     name = f"stateful_sessions_{uuid.uuid4().hex[:8]}"
@@ -2757,10 +2750,7 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from evidence_images_etl_airflow_spark.streaming.file_stream import windowed_counts
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # the streaming file source wants a directory or a glob, not a bare
-    # file path; the glob keeps the basePath at sf_dir
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
+    stream = _stream(spark, sf_dir, "events")
     stream = stream.withColumn("ts_utc", F.timestamp_micros(_event_micros(stream)))
     agg = windowed_counts(stream, "ts_utc", "event_type", "1 hour", "2 hours")
     name = f"stream_counts_{uuid.uuid4().hex[:8]}"
@@ -2811,8 +2801,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         sliding_counts,
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
+    stream = _stream(spark, sf_dir, "events")
     stream = stream.withColumn("ts_utc", F.timestamp_micros(_event_micros(stream)))
     agg = sliding_counts(
         stream, "ts_utc", "event_type", "1 hour", "30 minutes", "2 hours"
@@ -2861,10 +2850,8 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from evidence_images_etl_airflow_spark.streaming.file_stream import interval_join
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
     def side(event_type: str, ts_name: str, id_name: str) -> DataFrame:
-        s = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
+        s = _stream(spark, sf_dir, "events")
         s = s.withColumn(ts_name, F.timestamp_micros(_event_micros(s)))
         return s.filter(F.col("event_type") == event_type).select(
             "user_id", F.col("event_id").alias(id_name), ts_name
@@ -2923,8 +2910,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_within_watermark,
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
+    stream = _stream(spark, sf_dir, "events")
     stream = stream.withColumn("ts_utc", F.timestamp_micros(_event_micros(stream)))
     deduped = dedup_within_watermark(
         stream.select("user_id", "event_type", "ts_utc"),
@@ -3118,7 +3104,7 @@ def text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     merges = bpe_train(d, "text", n_merges=_BPE_MERGES)
-    return spark.range(0, 1, 1, 1).select(_lit_rows(
+    return spark.range(0, 1, 1, 1).select(lit_rows(
         merges,
         "rank int, pair_a string, pair_b string, merged string, pair_count bigint",
     ))
@@ -5986,7 +5972,7 @@ def ann_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    cbs = caching.materialize(pq_codebooks_from_rows(emb, m=4, n_codes=8))
+    cbs = pq_codebooks_from_rows(emb, m=4, n_codes=8)
     codes = pq_encode(emb, cbs, m=4)
     queries = emb.filter(F.col("vec_id") < 5)
     shortlist = pq_adc_topk(codes, queries, cbs, m=4, k=10)
@@ -6002,9 +5988,12 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinks the BYTES — 64 floats per vector become m=4 codes, so
     100 TB of embeddings score from ~1/64th the data with the original
     vectors left on disk. Corpus pass encodes once (materialize like
-    the IVF index in production); search is m broadcast lookups + one
-    per-query top-k window. The oracle replays encode + lookup-table
-    search end-to-end in SQL."""
+    the IVF index in production); search is m map lookups in one
+    broadcast row per query + one per-query top-k window. The 32-row
+    codebooks stay unpersisted: each reference to a cached frame runs
+    its own cache-stage job, while the encode and lookup broadcasts of
+    a plain frame reuse one exchange. The oracle replays encode +
+    lookup-table search end-to-end in SQL."""
     from evidence_images_etl_airflow_spark.operators.similarity import (
         pq_adc_topk,
         pq_codebooks_from_rows,
@@ -6012,7 +6001,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    cbs = caching.materialize(pq_codebooks_from_rows(emb, m=4, n_codes=8))
+    cbs = pq_codebooks_from_rows(emb, m=4, n_codes=8)
     codes = pq_encode(emb, cbs, m=4)
     queries = emb.filter(F.col("vec_id") < 5)
     return pq_adc_topk(codes, queries, cbs, m=4, k=3)
@@ -6106,8 +6095,9 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FAISS-style architecture a 100 TB vector corpus actually runs:
     two one-time corpus passes (cell assignment, code encoding) that
     production materializes, then per-batch search cost follows
-    probed-cell rows × m broadcast lookups. Oracle = the IVF and PQ
-    oracles composed into one CTE chain, value-matched end-to-end."""
+    probed-cell rows × m map lookups in one per-query broadcast.
+    Oracle = the IVF and PQ oracles composed into one CTE chain,
+    value-matched end-to-end."""
     from evidence_images_etl_airflow_spark.operators.similarity import (
         ivf_pq_topk,
         pq_codebooks_from_rows,
@@ -6117,7 +6107,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cid"), "embedding"
     )
-    cbs = caching.materialize(pq_codebooks_from_rows(emb, m=4, n_codes=8))
+    cbs = pq_codebooks_from_rows(emb, m=4, n_codes=8)
     queries = emb.filter(F.col("vec_id") < 5)
     return ivf_pq_topk(
         emb, queries, centroids, cbs, "vec_id", "embedding", "cid",
@@ -6162,7 +6152,7 @@ def ann_ivf_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cid"), "embedding"
     )
-    cbs = caching.materialize(pq_codebooks_from_rows(emb, m=4, n_codes=8))
+    cbs = pq_codebooks_from_rows(emb, m=4, n_codes=8)
     queries = emb.filter(F.col("vec_id") < 5)
     path, needs_build, mark_built = _scratch_build("ivfpq", sf_dir, "embeddings")
     if needs_build:
@@ -6746,8 +6736,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
+    stream = _stream(spark, sf_dir, "events")
     dim = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     enriched = (
         stream.join(F.broadcast(dim), stream.user_id == dim.c_custkey)
@@ -6843,8 +6832,7 @@ def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bin")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/orders.parque*")
+    stream = _stream(spark, sf_dir, "orders")
     cur = stream.filter(_event_micros(stream, "o_orderdate") >= cutoff_us)
     agg = (
         cur.select(bin_of(F.col("o_totalprice")).alias("bin"))
@@ -9490,7 +9478,7 @@ def streaming_countmin_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_files_per_trigger=1,
         )
         mark_built()
-    tbl = spark.read.parquet(store).drop("_last_batch")
+    tbl = read_parquet(spark, store).drop("_last_batch")
     return _cm_report(toks.select("tok"), tbl)
 
 
@@ -9902,7 +9890,7 @@ def join_autoplan_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
             if dec["left"]["n_rows"] >= dec["right"]["n_rows"]
             else dec["right"]
         )
-        meta = _lit_rows(
+        meta = lit_rows(
             [(
                 name, dec["strategy"], dec["num_salts"],
                 dec["left"]["n_rows"], dec["right"]["n_rows"],
@@ -10289,7 +10277,7 @@ def join_autoplan_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             if dec["left"]["n_rows"] >= dec["right"]["n_rows"]
             else dec["right"]
         )
-        meta = _lit_rows(
+        meta = lit_rows(
             [(
                 name, dec["strategy"], dec["num_salts"],
                 dec["left"]["n_rows"], dec["right"]["n_rows"],
@@ -10406,8 +10394,7 @@ def streaming_session_journeys(spark: SparkSession, sf_dir: str) -> DataFrame:
         journey_sessions_stateful,
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
+    stream = _stream(spark, sf_dir, "events")
     stream = stream.withColumn("ts_us", _event_micros(stream))
     stream = stream.withColumn("ts_utc", F.timestamp_micros(F.col("ts_us")))
     stream = stream.withColumn(
@@ -11291,7 +11278,7 @@ def join_chain_autoplan(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("lineitem", "orders", "ok"), ("orders", "customer", "ck")],
         )
         actual = joined.agg(F.count("*").cast("bigint").alias("actual_rows"))
-        meta = _lit_rows(
+        meta = lit_rows(
             [
                 (name, i + 1, dec["order"][i], int(dec["est_rows"][i]))
                 for i in range(len(dec["order"]))
@@ -14300,7 +14287,7 @@ def streaming_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_files_per_trigger=1,
         )
         mark_built()
-    counts = spark.read.parquet(store).drop("_last_batch")
+    counts = read_parquet(spark, store).drop("_last_batch")
     bounds = counts.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
     grid = bounds.select(
         F.explode(F.sequence(F.col("lo"), F.col("hi"))).alias("d")
@@ -14346,7 +14333,7 @@ def _curated_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
         mark_built()
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 @register(
@@ -14749,7 +14736,7 @@ def _incremental_score_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             carry_cols=carry,
         )
         mark_built()
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 @register(
@@ -15098,7 +15085,7 @@ def _ep6_refreshed_score_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", carry_cols=carry,
         )
         mark_built()
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 @register(
@@ -15405,7 +15392,7 @@ def streaming_score_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_files_per_trigger=1,
         )
         mark_built()
-    return spark.read.parquet(store).select(
+    return read_parquet(spark, store).select(
         "doc_id", "n_chars", "token_count", "score", "ingest_batch"
     )
 
