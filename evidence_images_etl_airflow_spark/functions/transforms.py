@@ -42,22 +42,23 @@ def coerce_bool_strings(df: DataFrame, columns: Iterable[str] | None = None) -> 
     return out
 
 
-def coerce_bool_columns_to_int(df: DataFrame, columns: Iterable[str]) -> DataFrame:
-    """Strict variant for columns the target DDL declares as int:
+def bool_to_int(col: str | Column) -> Column:
+    """Strict coercion for a column the target DDL declares as int:
     'True'->1, 'False'->0, numeric strings pass through the int cast,
     anything else -> NULL."""
-    out = df
-    for name in columns:
-        c = F.col(name)
-        out = out.withColumn(
-            name,
-            F.when(c == "True", F.lit(1))
-            .when(c == "False", F.lit(0))
-            # try_cast: ANSI-safe — non-numeric leftovers become NULL
-            # instead of failing the job (Spark 4 ANSI default)
-            .otherwise(c.try_cast(T.IntegerType())),
-        )
-    return out
+    c = F.col(col) if isinstance(col, str) else col
+    return (
+        F.when(c == "True", F.lit(1))
+        .when(c == "False", F.lit(0))
+        # try_cast: ANSI-safe — non-numeric leftovers become NULL
+        # instead of failing the job (Spark 4 ANSI default)
+        .otherwise(c.try_cast(T.IntegerType()))
+    )
+
+
+def coerce_bool_columns_to_int(df: DataFrame, columns: Iterable[str]) -> DataFrame:
+    """:func:`bool_to_int` over each of ``columns``, in one projection."""
+    return df.withColumns({name: bool_to_int(name) for name in columns})
 
 
 # --- T2: object -> string dtype cast ----------------------------------------
@@ -91,6 +92,15 @@ def normalize_nat(df: DataFrame) -> DataFrame:
                 F.when(F.isnan(F.col(f.name)), F.lit(None)).otherwise(F.col(f.name)),
             )
     return out
+
+
+# --- P2: non-empty predicate -----------------------------------------------
+def non_empty(col: str | Column) -> Column:
+    """``col != ''``: true for a non-empty string. SQL semantics, so a
+    NULL is dropped by a filter on it as well as ''
+    (:func:`operators.filters.non_empty_rows`)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return c != ""
 
 
 # --- T4: comma-split string -> array ----------------------------------------

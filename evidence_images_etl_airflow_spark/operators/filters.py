@@ -10,7 +10,8 @@ applies it only after full download + transform
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from evidence_images_etl_airflow_spark.functions.transforms import non_empty
 
 
 def non_empty_rows(df: DataFrame, column: str = "EvidenceImageURL") -> DataFrame:
@@ -21,4 +22,4 @@ def non_empty_rows(df: DataFrame, column: str = "EvidenceImageURL") -> DataFrame
     source encodes missing as '' so the distinction never bites there).
     We match the SQL semantics: NULL and '' both removed, documented.
     """
-    return df.filter(F.col(column) != "")
+    return df.filter(non_empty(column))

@@ -35,10 +35,10 @@ from pyspark.sql import functions as F
 
 from evidence_images_etl_airflow_spark.functions.transforms import lit_rows
 from evidence_images_etl_airflow_spark.sinks.writers import (
-    hadoop_fs,
     read_bytes,
     write_bytes_atomic,
 )
+from evidence_images_etl_airflow_spark.storage import hadoop_fs
 
 
 def file_inventory(spark: SparkSession, path: str) -> DataFrame:

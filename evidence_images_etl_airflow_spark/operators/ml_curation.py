@@ -769,7 +769,9 @@ def update_score_table(
     ABOVE the anti join in the plan, so it evaluates only for
     surviving (genuinely new) rows. Idempotent by construction:
     re-running the same batch appends zero rows because its ids are
-    already present — a retried ingest cannot double-score. Duplicate
+    already present — a retried ingest cannot double-score — and the
+    staged append (``sinks.writers.append_parquet``) adds no file for
+    zero rows, so a replay leaves the table's listing unchanged. Duplicate
     ids WITHIN one batch are collapsed before the anti join (r15
     ADVICE: they would all survive it and be scored and appended
     twice; the dedup is one exchange of the batch — the small side by
@@ -782,17 +784,17 @@ def update_score_table(
     same single exchange the dropDuplicates paid, now with a defined
     winner. Payload columns must therefore be orderable types.
     Not concurrency-safe across simultaneous writers (parquet append
-    has no transaction); serialize ingest batches or stage+rename.
+    has no transaction); serialize ingest batches.
     """
+    from evidence_images_etl_airflow_spark.sinks.writers import append_parquet
+
     spark = candidates.sparkSession
     existing = spark.read.parquet(path).select(id_col)
     fresh = dedup_ids_deterministic(candidates, id_col).join(
         existing, on=id_col, how="left_anti"
     )
     cols = list(carry_cols or [])
-    fresh.select(*cols, score.alias("score")).write.mode("append").parquet(
-        path
-    )
+    append_parquet(spark, fresh.select(*cols, score.alias("score")), path)
 
 
 def dedup_ids_deterministic(df: DataFrame, id_col: str) -> DataFrame:

@@ -31,6 +31,7 @@ from evidence_images_etl_airflow_spark.functions.vectors import (
     dot,
     hyperplane_signature,
 )
+from evidence_images_etl_airflow_spark.storage import read_parquet
 
 
 def _rank_topk(scored: DataFrame, score: str, k: int) -> DataFrame:
@@ -219,9 +220,6 @@ def ivf_topk_indexed(
     |queries| × nprobe (query batches are small by the operator's
     contract — they broadcast), which keeps the pruning static and
     visible in the plan rather than relying on runtime DPP."""
-    # imported here: sources imports operators, which imports this module
-    from evidence_images_etl_airflow_spark.sources.parquet_source import read_parquet
-
     probed = _probe_cells(queries, centroids, id_col, vec_col, centroid_id_col, nprobe)
     probe_cells = [r["cell"] for r in probed.select("cell").distinct().collect()]
     index = read_parquet(spark, index_path).filter(F.col("cell").isin(probe_cells))
@@ -500,9 +498,6 @@ def ivf_pq_topk_indexed(
     lookups in one per-query broadcast + one top-k window; the
     embeddings table is never touched (re-rank survivors via
     ``rerank_exact`` when recall matters)."""
-    # imported here: sources imports operators, which imports this module
-    from evidence_images_etl_airflow_spark.sources.parquet_source import read_parquet
-
     probed = _probe_cells(queries, centroids, id_col, vec_col, centroid_id_col, nprobe)
     probe_cells = [r["cell"] for r in probed.select("cell").distinct().collect()]
     index = read_parquet(spark, index_path).filter(F.col("cell").isin(probe_cells))

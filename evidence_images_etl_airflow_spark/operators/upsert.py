@@ -11,12 +11,13 @@ Two idempotency mechanisms exist in the reference:
   (learn/postgres_op.py:46-58).
 
 Spark has no in-place keyed table, so both become pure DataFrame
-algebra: dedup + left-anti against existing keys (J2), or a
-full-outer-join coalesce rewrite (J3). Both shuffle once on the key;
-at scale, bucketing the target by the key makes the anti-join
-shuffle-free on the target side, and a Delta/Iceberg MERGE would push
-this into the table format (jars not present here — parquet rewrite
-path instead).
+algebra: dedup + left-anti against existing keys (J2), or the batch
+unioned with the target rows whose key the batch lacks (J3). Both
+anti joins put the batch's keys on the build side: when the batch is
+small, Spark broadcasts them and streams the target through the join,
+so the target is never shuffled. A Delta/Iceberg MERGE would push this
+into the table format (jars not present here — parquet rewrite path
+instead).
 """
 
 from __future__ import annotations
@@ -60,9 +61,10 @@ def conflict_skip(
     K1 sink."""
     keys = list(keys)
     batch = dedup_first_wins(new_df, keys, order_by)
-    # Existing side only needs the keys: project before the anti-join so
-    # the shuffle moves keys, not whole rows.
-    return batch.join(existing.select(*keys).dropDuplicates(keys), keys, "left_anti")
+    # Existing side only needs the keys: project before the anti join so
+    # it reads keys, not whole rows. No dedup of those keys: a left anti
+    # join drops a row on its first match, so duplicates cost nothing.
+    return batch.join(existing.select(*keys), keys, "left_anti")
 
 
 def keyed_update(
@@ -111,39 +113,47 @@ def merge_upsert(
     update_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """J3: MERGE WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED THEN INSERT
-    (learn/postgres_op.py:46-58) as a full-outer-join rewrite over
-    immutable files. Returns the post-merge table contents.
+    (learn/postgres_op.py:46-58) over immutable files, as
+    ``source ∪ (target ▷ source keys)``: every source row, plus the
+    target rows whose key no source row has. Returns the post-merge
+    table contents, columns ``keys`` first, then the target's other
+    columns in target order; a key or updated column is typed as the
+    wider of its source and target types.
 
+    Keys match null-safely (a NULL key matches a NULL key). The anti
+    join's build side is the source's keys, which Spark broadcasts when
+    they are small, so target rows stream through it unshuffled.
     ``update_cols`` defaults to every non-key column present in both
-    sides. Source must be key-unique (MERGE requires it; enforce with
-    dedup_first_wins upstream).
+    sides; a target column outside it keeps the matched target row's
+    value, read by a left join of the source to the target that exists
+    only when there is such a column (and is NULL for an inserted row).
+
+    Source must be key-unique (MERGE requires it; enforce with
+    dedup_first_wins upstream). With duplicate keys in the target, a
+    matched source row appears once when every non-key column is
+    updated, where a full outer join would repeat it once per matched
+    target row; with kept columns, the left join still gives one row
+    per matched target row, each with that row's kept values.
     """
     keys = list(keys)
     non_keys = [c for c in target.columns if c not in keys]
     update_cols = list(update_cols) if update_cols is not None else [
         c for c in non_keys if c in source.columns
     ]
-    # Presence markers, not key-NULL checks: the join uses eqNullSafe, so
-    # a source row with a NULL key legitimately matches — testing
-    # s.<key0> IS NOT NULL would misclassify it as unmatched and let the
-    # target's stale values win.
+    kept = [c for c in non_keys if c not in update_cols]
+    if kept:
+        t = target.select(*keys, *kept).alias("t")
+        cond = [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in keys]
+        new_rows = source.alias("s").join(t, cond, "left").select(
+            *[F.col(f"s.{k}") for k in keys],
+            *[F.col(f"{'t' if c in kept else 's'}.{c}") for c in non_keys],
+        )
+    else:
+        new_rows = source.select(*keys, *non_keys)
+    # the anti join reads keys through their own aliases, so a source
+    # derived from the target (a self join) still resolves each side
     t = target.alias("t")
-    s = source.withColumn("__s_present", F.lit(1)).alias("s")
-    cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-    joined = t.join(s, cond, "full_outer")
-    s_present = F.col("s.__s_present").isNotNull()
-    out_cols = [
-        F.when(s_present, F.col(f"s.{k}")).otherwise(F.col(f"t.{k}")).alias(k)
-        for k in keys
-    ]
-    for c in non_keys:
-        if c in update_cols:
-            # matched -> source value; source-only -> source; target-only -> target
-            out_cols.append(
-                F.when(s_present, F.col(f"s.{c}"))
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
-            )
-        else:
-            out_cols.append(F.col(f"t.{c}").alias(c))
-    return joined.select(*out_cols)
+    sk = source.select(*keys).alias("sk")
+    cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"sk.{k}")) for k in keys]
+    untouched = t.join(sk, cond, "left_anti").select(*keys, *non_keys)
+    return new_rows.union(untouched)

@@ -13,93 +13,89 @@ The two post-processing UPDATE passes (T4 split at :230-260, T5
 URL-qualify at :262-289 — each a full read-back of the target in the
 reference) are fused *upstream* of the write: both derived arrays are
 pure functions of columns already in flight (SURVEY §4.1
-redundant-pass elimination).
+redundant-pass elimination). Each transform is one filter and one
+projection built from column expressions, so building it analyses
+the plan once, not once per column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from evidence_images_etl_airflow_spark import schemas
 from evidence_images_etl_airflow_spark.functions.transforms import (
-    coerce_bool_columns_to_int,
+    bool_to_int,
+    non_empty,
     qualify_urls,
     session_length,
     split_names,
 )
-from evidence_images_etl_airflow_spark.operators.filters import non_empty_rows
-from evidence_images_etl_airflow_spark.operators.projection import filter_columns
 
 
-def _lowercase_columns(df: DataFrame) -> DataFrame:
-    """Source casing -> DB casing: the reference's keep-lists are source
-    cased while the DDL is lowercase; matching is case-insensitive
-    (filter_columns.py:10). Normalizing once keeps output schemas
-    deterministic."""
-    return df.select([F.col(c).alias(c.lower()) for c in df.columns])
+def _keep_columns(raw: DataFrame, keep: list[str]) -> dict[str, Column]:
+    """The keep-list columns of ``raw`` by lowercase name (P1). Source
+    casing -> DB casing: the reference's keep-lists are source cased
+    while the DDL is lowercase; matching is case-insensitive
+    (filter_columns.py:10). A keep-list column missing from ``raw``
+    raises here, at build time, naming it."""
+    by_lower = {c.lower(): c for c in raw.columns}
+    missing = [c for c in keep if c.lower() not in by_lower]
+    if missing:
+        raise ValueError(f"keep-list columns missing from input: {missing}")
+    return {c.lower(): F.col(by_lower[c.lower()]) for c in keep}
 
 
 def transform_evidence_images(raw: DataFrame) -> DataFrame:
-    """Raw IRMQ export -> evidence_images shape (pre-write).
+    """Raw IRMQ export -> evidence_images shape (pre-write), as one
+    filter and one projection.
 
     Mirrors tasks at evidence_images_processing.py:404-425 in one plan:
     P1 projection (:366-378,404), T1 coercion (:408-410), P2 row filter
-    (:416), then the fused T4 split (:248) and T5 URL-qualify (:278-284).
+    (:416), then the fused T4 split (:248) and T5 URL-qualify (:278-284),
+    with columns in the target DDL's order (:46-62).
     """
-    df = filter_columns(raw, schemas.IRMQ_KEEP)  # P1
-    df = _lowercase_columns(df)
-    df = coerce_bool_columns_to_int(df, ["reexportstatus", "reprocessedstatus"])  # T1
-    df = non_empty_rows(df, "evidenceimageurl")  # P2
-    df = df.withColumn(
-        "formattedevidenceimagename", split_names("evidenceimagename")  # T4
-    ).withColumn(
-        "formattedevidenceimageurl",
-        qualify_urls("evidenceimageurl", "formattedevidenceimagename"),  # T5
+    c = _keep_columns(raw, schemas.IRMQ_KEEP)  # P1
+    names = split_names(c["evidenceimagename"])  # T4
+    c.update(
+        reexportstatus=bool_to_int(c["reexportstatus"]),  # T1
+        reprocessedstatus=bool_to_int(c["reprocessedstatus"]),
+        formattedevidenceimagename=names,
+        formattedevidenceimageurl=qualify_urls(c["evidenceimageurl"], names),  # T5
     )
-    # order columns to the target DDL (evidence_images_processing.py:46-62)
-    return df.select([f.name for f in schemas.EVIDENCE_IMAGES.fields])
+    return raw.filter(non_empty(c["evidenceimageurl"])).select(  # P2
+        [c[f.name].alias(f.name) for f in schemas.EVIDENCE_IMAGES.fields]
+    )
 
 
-# source-casing -> sessions-DDL column renames
+# sessions-DDL column -> source column, where the names differ
 # (keep-list :379-403 vs DDL :81-106)
-_SESSION_RENAMES = {
-    "sessionuid": "sessionuid",
-    "sessionstartdatetime": "session_start_date",
-    "sessionenddatetime": "session_end_date",
-    "programid": "program_id",
-    "programname": "program_name",
-    "programitemid": "program_item_id",
-    "programitemname": "program_item_name",
-    "clientcode": "client_code",
-    "subclientcode": "sub_client_code",
-    "outletcode": "outlet_code",
-    "outletname": "outlet_name",
-    "countrycode": "country_code",
-    "userid": "user_id",
-    "userprofile": "user_profile",
-    "sessionstatus": "sessionstatus",
-    "latitude": "latitude",
-    "longitude": "longitude",
-    "cancelcallnote": "cancelcallnote",
-    "cancelcallreason": "cancelcallreason",
-    "cancelevidenceimageurl": "cancelevidenceimageurl",
-    "cancelevidenceimagename": "cancelevidenceimagename",
-    "sessionendlatitude": "sessionendlatitude",
-    "sessionendlongitude": "sessionendlongitude",
+_SESSION_SOURCES = {
+    "session_start_date": "sessionstartdatetime",
+    "session_end_date": "sessionenddatetime",
+    "program_id": "programid",
+    "program_name": "programname",
+    "program_item_id": "programitemid",
+    "program_item_name": "programitemname",
+    "client_code": "clientcode",
+    "sub_client_code": "subclientcode",
+    "outlet_code": "outletcode",
+    "outlet_name": "outletname",
+    "country_code": "countrycode",
+    "user_id": "userid",
+    "user_profile": "userprofile",
 }
 
 
 def transform_sessions(raw: DataFrame) -> DataFrame:
-    """Raw IRSession export -> sessions shape (pre-write), including
-    ``session_length`` = end - start, implementing the reference's TODO
-    (evidence_images_processing.py:85,:183 — T8)."""
-    df = filter_columns(raw, schemas.SESSION_KEEP)  # P1 (:379-405)
-    df = _lowercase_columns(df)
-    for src, dst in _SESSION_RENAMES.items():
-        if src != dst and src in df.columns:
-            df = df.withColumnRenamed(src, dst)
-    df = df.withColumn(
-        "session_length", session_length("session_end_date", "session_start_date")  # T8
+    """Raw IRSession export -> sessions shape (pre-write) as one
+    projection, including ``session_length`` = end - start, implementing
+    the reference's TODO (evidence_images_processing.py:85,:183 — T8)."""
+    c = _keep_columns(raw, schemas.SESSION_KEEP)  # P1 (:379-405)
+    c["session_length"] = session_length(  # T8
+        c["sessionenddatetime"], c["sessionstartdatetime"]
     )
-    return df.select([f.name for f in schemas.SESSIONS.fields])
+    return raw.select([
+        c[_SESSION_SOURCES.get(f.name, f.name)].alias(f.name)
+        for f in schemas.SESSIONS.fields
+    ])

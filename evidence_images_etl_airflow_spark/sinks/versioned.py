@@ -32,10 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from evidence_images_etl_airflow_spark.sinks.writers import (
-    hadoop_fs,
     read_bytes,
     write_bytes_atomic,
 )
+from evidence_images_etl_airflow_spark.storage import hadoop_fs
 
 
 def _flip_pointer(spark: SparkSession, table: str, value: int) -> None:

@@ -14,12 +14,18 @@ in by changing ``format``).
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from evidence_images_etl_airflow_spark.operators.upsert import conflict_skip, merge_upsert
+from evidence_images_etl_airflow_spark.operators.upsert import (
+    conflict_skip,
+    dedup_first_wins,
+    merge_upsert,
+)
+from evidence_images_etl_airflow_spark.storage import hadoop_fs, read_parquet
 
 
 class VarcharOverflowError(ValueError):
@@ -57,51 +63,44 @@ def validate_varchar_lengths(
     return df
 
 
-def append_parquet(
-    df: DataFrame,
-    path: str,
-    varchar_limits: dict[str, int] | None = None,
-    partition_by: Sequence[str] | None = None,
-) -> None:
-    """K2: plain validated append (the sessions load,
-    evidence_images_processing.py:181-228)."""
-    if varchar_limits:
-        validate_varchar_lengths(df, varchar_limits)
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def hadoop_fs(spark: SparkSession, path: str):
-    """``(Path class, FileSystem)`` for ``path``: the Hadoop handles every
-    listing, rename and delete in the package goes through, so each works
-    on any supported storage scheme (local, HDFS, s3a/abfs), not only the
-    local filesystem ``os``/``shutil`` reach."""
-    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs = hadoop_path(path).getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
-    return hadoop_path, fs
-
-
 def read_parquet_target(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet target, recovering from the ``__backup`` copy an
-    interrupted :func:`swap_parquet` may have left behind. Returns None
-    only when neither the target nor its backup exists (first write);
-    any other read error (a corrupt file, a permission failure)
-    propagates, because treating it as a first write would discard every
-    row the target holds."""
+    """Read a parquet target through :func:`storage.read_parquet`,
+    recovering from the ``__backup`` copy an interrupted
+    :func:`swap_parquet` may have left behind. Returns None only when
+    neither the target nor its backup exists (first write); any other
+    read error (a corrupt file, a permission failure) propagates,
+    because treating it as a first write would discard every row the
+    target holds."""
     hadoop_path, fs = hadoop_fs(spark, path)
     backup = path.rstrip("/") + "__backup"
     if fs.exists(hadoop_path(path)):
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     if fs.exists(hadoop_path(backup)):
         # crash window: the old target was renamed aside but the new one
         # never landed. The backup IS the current target, and the
         # interrupted write replays against it.
-        return spark.read.parquet(backup)
+        return read_parquet(spark, backup)
     return None
+
+
+def _staging_path(spark: SparkSession, path: str) -> str:
+    """A fresh ``<path>__staging_<uuid>`` sibling for a write to stage
+    in, after reclaiming the ones a crashed write leaked: a crash
+    between the staging write and its renames leaves a uuid-named
+    sibling no later run would otherwise identify. Best-effort: a
+    listing or delete failure must not block the write."""
+    hadoop_path, fs = hadoop_fs(spark, path)
+    target = hadoop_path(path)
+    parent = target.getParent()
+    marker = target.getName() + "__staging_"
+    try:
+        if parent is not None and fs.exists(parent):
+            for st in fs.listStatus(parent):
+                if st.getPath().getName().startswith(marker):
+                    fs.delete(st.getPath(), True)
+    except Exception:
+        pass
+    return f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
 
 
 def swap_parquet(spark: SparkSession, df: DataFrame, path: str) -> None:
@@ -117,25 +116,10 @@ def swap_parquet(spark: SparkSession, df: DataFrame, path: str) -> None:
     not by raising, so each rename is checked. A failed staging->target
     rename raises with the backup intact; falling through to delete the
     backup would leave no complete copy at all."""
-    import uuid
-
     base = path.rstrip("/")
     hadoop_path, fs = hadoop_fs(spark, path)
     target = hadoop_path(path)
-    # Reclaim staging directories a crashed swap leaked: a crash between
-    # the staging write and the renames leaves a uuid-named sibling no
-    # later run would otherwise identify. Best-effort: a listing or
-    # delete failure must not block the write.
-    parent = target.getParent()
-    marker = target.getName() + "__staging_"
-    try:
-        if parent is not None and fs.exists(parent):
-            for st in fs.listStatus(parent):
-                if st.getPath().getName().startswith(marker):
-                    fs.delete(st.getPath(), True)
-    except Exception:
-        pass
-    staging = f"{base}__staging_{uuid.uuid4().hex[:8]}"
+    staging = _staging_path(spark, path)
     df.write.mode("overwrite").parquet(staging)  # materializes BEFORE any rename
     backup = hadoop_path(base + "__backup")
     if fs.exists(target):
@@ -156,6 +140,56 @@ def swap_parquet(spark: SparkSession, df: DataFrame, path: str) -> None:
             f"{base}__backup (recovered on next read)"
         )
     fs.delete(backup, True)
+
+
+def append_parquet(spark: SparkSession, df: DataFrame, path: str) -> int:
+    """Append ``df`` to the parquet directory ``path`` and return how
+    many rows it appended; a 0-row ``df`` leaves ``path``'s listing
+    unchanged. ``df`` runs once: it is written to a staging sibling and
+    counted on that write by an ``Observation`` (no persist, no count
+    job), and only when the count is above 0 are the staged part files
+    renamed into ``path``. A plain observed append would still add a
+    0-row parquet file on every replay.
+
+    ``df`` may read ``path`` itself: it is fully written before any
+    rename. A missing target whose ``__backup`` exists (the crash state
+    of :func:`swap_parquet`) is renamed back into place first, so the
+    append lands next to the rows it was computed against. Each rename
+    is checked; a failed one raises, and the files not yet moved are
+    dropped with the staging directory. Part-file renames are not one
+    atomic step: a crash between two of them appends part of the batch,
+    and a keyed replay (:func:`idempotent_append_parquet`) appends the
+    rest."""
+    base = path.rstrip("/")
+    hadoop_path, fs = hadoop_fs(spark, path)
+    staging = _staging_path(spark, path)
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(staging)
+    n = obs.get["n"]
+    staged, target = hadoop_path(staging), hadoop_path(path)
+    try:
+        if not n:
+            return 0
+        backup = hadoop_path(base + "__backup")
+        if not fs.exists(target) and fs.exists(backup):
+            if not fs.rename(backup, target):
+                raise IOError(f"rename {base}__backup -> {path} returned false")
+        if not fs.exists(target):
+            if not fs.rename(staged, target):
+                raise IOError(f"rename {staging} -> {path} returned false")
+            return n
+        for st in fs.listStatus(staged):
+            name = st.getPath().getName()
+            if name.startswith(("_", ".")):
+                continue
+            if not fs.rename(st.getPath(), hadoop_path(target, name)):
+                raise IOError(
+                    f"append failed: rename {staging}/{name} -> {path} "
+                    "returned false"
+                )
+    finally:
+        fs.delete(staged, True)
+    return n
 
 
 def write_bytes_atomic(spark: SparkSession, path: str, data: bytes) -> None:
@@ -213,30 +247,24 @@ def idempotent_append_parquet(
 ) -> int:
     """K1: the conflict-skip load (ON CONFLICT DO NOTHING,
     evidence_images_processing.py:169-171) on a parquet target. Appends
-    only rows whose key is new; returns how many were appended. A target
+    only rows whose key is new, through :func:`append_parquet`, and
+    returns how many it appended. The batch's plan runs once, counted on
+    its own write; a replayed batch (the reference's 15-day lookback)
+    appends 0 rows and leaves the target's listing unchanged. A target
     that exists but cannot be read raises before anything is appended.
 
     Scale note: only the *keys* of the existing table are read (column
-    pruning reaches the scan), so re-runs cost one key-scan + one
-    shuffle, not a rewrite. With a Delta/Iceberg target this becomes
-    MERGE WHEN NOT MATCHED THEN INSERT with file skipping.
+    pruning reaches the scan) and anti-joined against the deduplicated
+    batch, so a re-run costs one key scan, not a rewrite. With a
+    Delta/Iceberg target this becomes MERGE WHEN NOT MATCHED THEN
+    INSERT with file skipping.
     """
     existing = read_parquet_target(spark, path)
     if existing is None:
-        from evidence_images_etl_airflow_spark.operators.upsert import dedup_first_wins
-
         to_insert = dedup_first_wins(df, keys, order_by)
     else:
         to_insert = conflict_skip(df, existing, keys, order_by)
-    # count + append in one cached pass so the plan runs once
-    to_insert = to_insert.persist()
-    try:
-        n = to_insert.count()
-        if n:
-            to_insert.write.mode("append").parquet(path)
-    finally:
-        to_insert.unpersist()
-    return n
+    return append_parquet(spark, to_insert, path)
 
 
 def merge_into_parquet(
@@ -247,11 +275,16 @@ def merge_into_parquet(
     update_cols: Sequence[str] | None = None,
 ) -> None:
     """K5/J3: staging + MERGE (learn/postgres_op.py:30-68) on a parquet
-    target: read the target, full-outer merge, and replace the target
-    through :func:`swap_parquet`. A first write (no target, no backup)
-    writes ``source`` alone; a target that exists but cannot be read
-    raises with its files untouched. On a table format this is a native
-    MERGE; on raw parquet a rewrite is the only transactional option."""
+    target: read the target, merge with :func:`merge_upsert` (the batch
+    plus the target rows whose key the batch lacks), and replace the
+    target through :func:`swap_parquet`. A first write (no target, no
+    backup) writes ``source`` alone; a target that exists but cannot be
+    read raises with its files untouched. The rewrite keeps the target's
+    file split: each scanned target partition is written back with its
+    untouched rows, next to the batch's own files, so the file count
+    grows with each batch as an append's does. On a table format this is
+    a native MERGE; on raw parquet a rewrite is the only transactional
+    option."""
     target = read_parquet_target(spark, path)
     merged = source if target is None else merge_upsert(target, source, keys, update_cols)
     swap_parquet(spark, merged, path)

@@ -32,7 +32,7 @@ from urllib.parse import unquote
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from evidence_images_etl_airflow_spark.sinks.writers import hadoop_fs
+from evidence_images_etl_airflow_spark.storage import hadoop_fs
 
 
 def build_manifest(

@@ -23,16 +23,13 @@ materialization boundary.
 from __future__ import annotations
 
 import datetime as dt
-import re
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from evidence_images_etl_airflow_spark.operators.projection import filter_columns
 from evidence_images_etl_airflow_spark.operators.union import concat_dfs
-from evidence_images_etl_airflow_spark.sinks.writers import hadoop_fs
 
 
 # --- S4: relative date-window computation -----------------------------------
@@ -87,63 +84,6 @@ def scan_parquet(
     df = reader.parquet(*paths)
     if columns:
         df = filter_columns(df, columns)
-    return df
-
-
-# Reader settings that change the schema Spark infers from the same files.
-_INFER_CONFS = (
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.legacy.parquet.nanosAsLong",
-)
-_SCHEMAS: dict[str, tuple] = {}  # path -> (key, schema) of its last inference
-
-
-def _files_key(spark: SparkSession, path: str) -> tuple | None:
-    """(path, length, mtime) of the file ``path`` or of each visible file
-    directly under the directory ``path``, plus the inference settings;
-    None where that listing does not name every file the read opens."""
-    if any(c in path for c in "*?[{"):
-        return None
-    hadoop_path, fs = hadoop_fs(spark, path)
-    try:
-        files = [fs.getFileStatus(hadoop_path(path))]
-    except Py4JJavaError:  # missing path: the plain read raises its own error
-        return None
-    if files[0].isDirectory():
-        # skip what Spark's listing skips (_SUCCESS, .crc), not _k=1
-        files = [
-            s for s in fs.listStatus(hadoop_path(path))
-            if not re.match(r"\.|_[^=]*$", s.getPath().getName())
-        ]
-        if any(s.isDirectory() for s in files):
-            return None
-    return tuple(spark.conf.get(k, None) for k in _INFER_CONFS) + tuple(
-        (s.getPath().toString(), s.getLen(), s.getModificationTime()) for s in files
-    )
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers the schema once per file
-    version. Each inferring read runs a Spark job over the file footers,
-    even for one unchanged file; this reader keeps the inferred schema
-    keyed on the path, length and modification time of every file it
-    lists (through Hadoop ``FileSystem``, so any scheme) and on the
-    reader settings that change inference, and passes it to
-    ``spark.read.schema`` while the key holds. Any change to a file
-    changes the key, and the next read infers again; one entry per path.
-
-    A glob, a missing path, and a directory with a visible subdirectory
-    (a partitioned or nested layout) fall back to the plain read."""
-    key = _files_key(spark, path)
-    if key is None:
-        return spark.read.parquet(path)
-    hit = _SCHEMAS.get(path)
-    if hit is not None and hit[0] == key:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[path] = (key, df.schema)
     return df
 
 

@@ -15,11 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from evidence_images_etl_airflow_spark.sinks.writers import (
-    hadoop_fs,
     idempotent_append_parquet,
     read_parquet_target,
     swap_parquet,
 )
+from evidence_images_etl_airflow_spark.storage import hadoop_fs
 
 # Column stamped on every persisted-store row recording the foreachBatch
 # batch id that produced it. foreachBatch is at-least-once: a batch

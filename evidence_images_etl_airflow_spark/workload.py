@@ -24,6 +24,7 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -125,7 +126,7 @@ from evidence_images_etl_airflow_spark.operators.upsert import (
     merge_upsert,
 )
 from evidence_images_etl_airflow_spark.session import parallel_actions
-from evidence_images_etl_airflow_spark.sources.parquet_source import read_parquet
+from evidence_images_etl_airflow_spark.storage import hadoop_fs, read_parquet
 
 
 @dataclass
@@ -152,34 +153,25 @@ _SCRATCH_BUILDS: dict[tuple[str, str], str] = {}
 _SCRATCH_PATHS: list[str] = []
 
 
-def _corpus_fingerprint(sf_dir: str, table: str) -> str:
-    """mtime_ns+size fingerprint of a source parquet (file or
-    directory — testdata ships single files; a directory folds every
-    member file). `missing` for an absent source: the build then runs
-    and fails with the real read error rather than a stat error."""
-    p = os.path.join(sf_dir, f"{table}.parquet")
+def _corpus_fingerprint(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """Fingerprint of a source parquet table (a file or a directory):
+    ``relative path:length:mtime`` of every file under it, sorted, from
+    the Hadoop listing, so a URI ``sf_dir`` (``file:``, ``s3a://``)
+    fingerprints like a plain path. `missing` for an absent source: the
+    build then runs and fails with the real read error."""
+    p = f"{sf_dir.rstrip('/')}/{table}.parquet"
+    hadoop_path, fs = hadoop_fs(spark, p)
     try:
-        if os.path.isdir(p):
-            # r15 (r14 ADVICE): key each part on the SORTED RELATIVE
-            # path, not the bare basename in os.walk root order — the
-            # old form let an identical corpus fingerprint differently
-            # across filesystems (walk order is unspecified) and let
-            # same-named files in different subdirs collide.
-            parts = []
-            for root, dirs, files in os.walk(p):
-                dirs.sort()
-                for fn in files:
-                    full = os.path.join(root, fn)
-                    st = os.stat(full)
-                    parts.append(
-                        f"{os.path.relpath(full, p)}:{st.st_size}:{st.st_mtime_ns}"
-                    )
-            parts.sort()
-            return "|".join(parts)
-        st = os.stat(p)
-        return f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
+        root = fs.getFileStatus(hadoop_path(p)).getPath().toString()
+        parts = []
+        files = fs.listFiles(hadoop_path(p), True)
+        while files.hasNext():
+            st = files.next()
+            rel = st.getPath().toString()[len(root):].lstrip("/")
+            parts.append(f"{rel}:{st.getLen()}:{st.getModificationTime()}")
+    except Py4JJavaError:
         return "missing"
+    return "|".join(sorted(parts))
 
 
 def _cleanup_scratch_paths() -> None:
@@ -193,7 +185,7 @@ atexit.register(_cleanup_scratch_paths)
 
 
 def _scratch_build(
-    tag: str, sf_dir: str, table: str
+    spark: SparkSession, tag: str, sf_dir: str, table: str
 ) -> tuple[str, bool, Callable[[], None]]:
     """pid-keyed scratch path under the system tempdir, a needs-build
     flag, and a ``mark_built`` callback the caller MUST invoke after a
@@ -218,7 +210,7 @@ def _scratch_build(
     import shutil
     import tempfile
 
-    fp = _corpus_fingerprint(sf_dir, table)
+    fp = _corpus_fingerprint(spark, sf_dir, table)
     path = os.path.join(
         tempfile.gettempdir(),
         f"sg{tag}_{hashlib.sha1(sf_dir.encode()).hexdigest()[:12]}"
@@ -276,8 +268,8 @@ def register(name: str, oracle: str | None, headline: bool = False):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Table ``name`` of ``sf_dir``. The schema is inferred once per file
-    version (``sources.parquet_source.read_parquet``): later reads reuse
-    it while the file's path, length and modification time are unchanged,
+    version (``storage.read_parquet``): later reads reuse it while the
+    inferring file's path, length and modification time are unchanged,
     so they run no schema job."""
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
@@ -535,7 +527,8 @@ def j2_conflict_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j3_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: MERGE matched-update / not-matched-insert
-    (learn/postgres_op.py:46-58) as the full-outer-join rewrite."""
+    (learn/postgres_op.py:46-58) as ``merge_upsert``'s rewrite: the
+    batch plus the target rows whose key the batch lacks."""
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
     full = _t(spark, sf_dir, "customer")
     updates = full.filter(F.col("c_mktsegment") == "BUILDING").select(
@@ -6154,7 +6147,7 @@ def ann_ivf_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cbs = pq_codebooks_from_rows(emb, m=4, n_codes=8)
     queries = emb.filter(F.col("vec_id") < 5)
-    path, needs_build, mark_built = _scratch_build("ivfpq", sf_dir, "embeddings")
+    path, needs_build, mark_built = _scratch_build(spark, "ivfpq", sf_dir, "embeddings")
     if needs_build:
         build_ivf_pq_index(emb, centroids, cbs, path, m=4)
         mark_built()
@@ -9454,7 +9447,7 @@ def streaming_countmin_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # later invocations (the ann_ivf_pq_indexed caching discipline —
     # the pid suffix keeps concurrent bench/verify processes apart);
     # repeat runs measure the warm store-read + report, not a rebuild.
-    base, needs_build, mark_built = _scratch_build("cmstream", sf_dir, "documents")
+    base, needs_build, mark_built = _scratch_build(spark, "cmstream", sf_dir, "documents")
     src, store, ck = f"{base}/src", f"{base}/store", f"{base}/ck"
     if needs_build:
         for b in range(3):
@@ -14266,7 +14259,7 @@ def streaming_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("ts_us div 86400000000").cast("bigint").alias("d"),
         (F.col("event_id") % 3).alias("__b"),
     )
-    base, needs_build, mark_built = _scratch_build("cusumstream", sf_dir, "events")
+    base, needs_build, mark_built = _scratch_build(spark, "cusumstream", sf_dir, "events")
     src, store, ck = f"{base}/src", f"{base}/store", f"{base}/ck"
     if needs_build:
         for b in range(3):
@@ -14319,7 +14312,7 @@ def _curated_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialize_score_table,
     )
 
-    path, needs_build, mark_built = _scratch_build("curated", sf_dir, "documents")
+    path, needs_build, mark_built = _scratch_build(spark, "curated", sf_dir, "documents")
     if needs_build:
         d = _t(spark, sf_dir, "documents")
         materialize_score_table(
@@ -14720,7 +14713,7 @@ def _incremental_score_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path, needs_build, mark_built = _scratch_build(
-        "curinc", sf_dir, "documents"
+        spark, "curinc", sf_dir, "documents"
     )
     if needs_build:
         base = _t(spark, sf_dir, "documents")
@@ -15064,7 +15057,7 @@ def _ep6_refreshed_score_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token_count", F.size(tokens(F.col("text")))
         ).withColumn("ingest_batch", F.lit(batch))
 
-    path, needs_build, mark_built = _scratch_build("ep6crawl", sf_dir, "documents")
+    path, needs_build, mark_built = _scratch_build(spark, "ep6crawl", sf_dir, "documents")
     if needs_build:
         base = _t(spark, sf_dir, "documents")
         hist = base.filter(F.col("doc_id") % 5 != 0)
@@ -15361,7 +15354,7 @@ def streaming_score_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     carry = ["doc_id", "n_chars", "token_count", "ingest_batch"]
     path, needs_build, mark_built = _scratch_build(
-        "scoreingeststream", sf_dir, "documents"
+        spark, "scoreingeststream", sf_dir, "documents"
     )
     src, store, ck = f"{path}/src", f"{path}/store", f"{path}/ck"
     if needs_build:

@@ -578,7 +578,7 @@ def test_bootstrap_chunked_replicates_match_single_pass(spark, monkeypatch):
     assert single70.asDict() == row70.asDict()
 
 
-def test_scratch_build_fingerprint_triggers_rebuild(tmp_path):
+def test_scratch_build_fingerprint_triggers_rebuild(spark, tmp_path):
     """r13 ADVICE: the once-per-process scratch guard must rebuild
     when the SOURCE corpus changes mid-process (fingerprint keying),
     not serve the stale table, and must register paths for atexit
@@ -591,16 +591,16 @@ def test_scratch_build_fingerprint_triggers_rebuild(tmp_path):
     src.write_bytes(b"v1-bytes")
     sf_dir = str(tmp_path)
 
-    p1, b1, mark1 = workload._scratch_build("testtag", sf_dir, "documents")
+    p1, b1, mark1 = workload._scratch_build(spark, "testtag", sf_dir, "documents")
     assert b1 is True
     mark1()
-    p2, b2, _ = workload._scratch_build("testtag", sf_dir, "documents")
+    p2, b2, _ = workload._scratch_build(spark, "testtag", sf_dir, "documents")
     assert (p2, b2) == (p1, False)
 
     # regenerate the corpus: different size -> different fingerprint
     # -> a DIFFERENT path, with the completed v1 build left on disk
     src.write_bytes(b"v2-bytes-longer")
-    p3, b3, mark3 = workload._scratch_build("testtag", sf_dir, "documents")
+    p3, b3, mark3 = workload._scratch_build(spark, "testtag", sf_dir, "documents")
     assert b3 is True
     assert p3 != p1
     assert os.path.exists(os.path.join(p1, "_SG_BUILD_OK"))
@@ -609,7 +609,27 @@ def test_scratch_build_fingerprint_triggers_rebuild(tmp_path):
     assert p3 in workload._SCRATCH_PATHS
 
 
-def test_scratch_build_failed_build_retries(tmp_path):
+def test_scratch_build_under_a_uri_rebuilds_a_rewritten_table(spark, tmp_path):
+    """A ``file:`` URI ``sf_dir`` fingerprints from the Hadoop listing
+    like a plain path, so a table rewritten under it rebuilds the
+    scratch build instead of serving the old one (``os.stat`` saw no
+    file at a URI and fingerprinted every version as `missing`)."""
+    from evidence_images_etl_airflow_spark import workload
+
+    table = str(tmp_path / "documents.parquet")
+    sf_dir = "file:" + str(tmp_path)
+    spark.range(3).write.parquet(table)
+    p1, b1, mark1 = workload._scratch_build(spark, "uritag", sf_dir, "documents")
+    assert b1 is True
+    mark1()
+    assert workload._scratch_build(spark, "uritag", sf_dir, "documents")[:2] == (p1, False)
+    spark.range(5).write.mode("overwrite").parquet(table)
+    p2, b2, _ = workload._scratch_build(spark, "uritag", sf_dir, "documents")
+    assert b2 is True and p2 != p1
+    assert workload._corpus_fingerprint(spark, sf_dir, "missing_table") == "missing"
+
+
+def test_scratch_build_failed_build_retries(spark, tmp_path):
     """r14 ADVICE (medium): success is recorded only by the caller's
     mark_built() — a build that RAISES must leave needs_build True for
     the next call in the same process, not silently serve a wiped or
@@ -621,7 +641,7 @@ def test_scratch_build_failed_build_retries(tmp_path):
     sf_dir = str(tmp_path)
 
     p1, b1, _mark_never_called = workload._scratch_build(
-        "failtag", sf_dir, "documents"
+        spark, "failtag", sf_dir, "documents"
     )
     assert b1 is True
     # simulate a build that wrote partial output then raised:
@@ -629,16 +649,16 @@ def test_scratch_build_failed_build_retries(tmp_path):
     os.makedirs(p1, exist_ok=True)
     (tmp_path / "partial").write_bytes(b"")
 
-    p2, b2, mark2 = workload._scratch_build("failtag", sf_dir, "documents")
+    p2, b2, mark2 = workload._scratch_build(spark, "failtag", sf_dir, "documents")
     assert (p2, b2) == (p1, True)
     mark2()
-    p3, b3, _ = workload._scratch_build("failtag", sf_dir, "documents")
+    p3, b3, _ = workload._scratch_build(spark, "failtag", sf_dir, "documents")
     assert (p3, b3) == (p1, False)
 
 
-def test_corpus_fingerprint_canonical_over_layout(tmp_path):
+def test_corpus_fingerprint_canonical_over_layout(spark, tmp_path):
     """r14 ADVICE (low): the directory fingerprint must be canonical —
-    independent of os.walk root order — and must distinguish
+    independent of listing order — and must distinguish
     same-named files in different subdirs (relative path, not
     basename, keys each part)."""
     from evidence_images_etl_airflow_spark import workload
@@ -649,18 +669,20 @@ def test_corpus_fingerprint_canonical_over_layout(tmp_path):
     f1, f2 = d / "a" / "part-0", d / "b" / "part-0"
     f1.write_bytes(b"xx")
     f2.write_bytes(b"yy")
-    fp = workload._corpus_fingerprint(str(tmp_path), "documents")
+    fp = workload._corpus_fingerprint(spark, str(tmp_path), "documents")
     # relative paths present -> same-named files in different subdirs
     # cannot collide
     assert "a/part-0" in fp and "b/part-0" in fp
     # swapping which subdir holds which mtime changes the print even
-    # though the bag of (basename, size, mtime) is identical
-    os.utime(f1, ns=(111, 111))
-    os.utime(f2, ns=(222, 222))
-    fp = workload._corpus_fingerprint(str(tmp_path), "documents")
-    os.utime(f1, ns=(222, 222))
-    os.utime(f2, ns=(111, 111))
-    fp_swapped = workload._corpus_fingerprint(str(tmp_path), "documents")
+    # though the bag of (basename, size, mtime) is identical; the
+    # Hadoop listing reports mtimes in milliseconds
+    t1, t2 = 111_000_000, 222_000_000
+    os.utime(f1, ns=(t1, t1))
+    os.utime(f2, ns=(t2, t2))
+    fp = workload._corpus_fingerprint(spark, str(tmp_path), "documents")
+    os.utime(f1, ns=(t2, t2))
+    os.utime(f2, ns=(t1, t1))
+    fp_swapped = workload._corpus_fingerprint(spark, str(tmp_path), "documents")
     assert fp_swapped != fp
     # sorted parts: the print equals its own canonical re-sort
     assert fp == "|".join(sorted(fp.split("|")))

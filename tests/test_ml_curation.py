@@ -546,6 +546,29 @@ def test_update_score_table_appends_only_new_ids(spark, tmp_path):
     assert spark.read.parquet(path).count() == 4
 
 
+def test_update_score_table_replay_leaves_listing_unchanged(spark, tmp_path):
+    """A replayed batch scores nothing and adds no file: the append is
+    staged and counted on its own write, and a 0-row staging is dropped
+    instead of landing as an empty parquet file."""
+    import os
+
+    from evidence_images_etl_airflow_spark.operators.ml_curation import (
+        materialize_score_table,
+        update_score_table,
+    )
+
+    path = str(tmp_path / "scored")
+    score = F.length("text").cast("double")
+    docs = spark.createDataFrame([(1, "ab"), (2, "c")], "doc_id bigint, text string")
+    materialize_score_table(docs, score, path, carry_cols=["doc_id"])
+    listing = sorted(os.listdir(path))
+    for _ in range(2):
+        update_score_table(docs, score, path, "doc_id", carry_cols=["doc_id"])
+        assert sorted(os.listdir(path)) == listing
+    assert sorted(os.listdir(tmp_path)) == ["scored"]
+    assert spark.read.parquet(path).count() == 2
+
+
 def test_incremental_score_query_matches_full_rebuild(spark):
     """The differential claim curation_score_table_incremental makes:
     bootstrap(history) + update(re-crawl) == inline scoring of the

@@ -1,5 +1,5 @@
-"""``sources.parquet_source.read_parquet``: the schema is inferred once
-per file version, and every read returns what a plain
+"""``storage.read_parquet``: the schema is inferred once per version of
+the file Spark infers it from, and every read returns what a plain
 ``spark.read.parquet`` returns."""
 
 from __future__ import annotations
@@ -11,8 +11,8 @@ import pyarrow.parquet as pq
 import pytest
 from conftest import SF_DIR
 
+from evidence_images_etl_airflow_spark import storage as P
 from evidence_images_etl_airflow_spark import workload as W
-from evidence_images_etl_airflow_spark.sources import parquet_source as P
 
 TABLES = sorted(f.removesuffix(".parquet") for f in os.listdir(SF_DIR))
 
@@ -28,15 +28,40 @@ def test_file_rewritten_in_place_reads_new_schema(spark, tmp_path):
     assert [tuple(r) for r in df.collect()] == [(3, "x")]
 
 
-def test_directory_that_gains_a_file_gets_a_new_key(spark, tmp_path):
+def test_key_follows_the_inferring_file(spark, tmp_path):
+    """A plain read of a directory infers from its first data file by
+    sorted path: a file that sorts after it keeps the key and the cached
+    schema, one that sorts before it changes the key, and so does a
+    rename that makes another file first."""
     path = str(tmp_path / "d")
-    spark.range(3).write.parquet(path)
-    before = P._files_key(spark, path)
+    os.makedirs(path)
+    pq.write_table(pa.table({"a": [1, 2]}), f"{path}/part-b.parquet")
+    key = P._files_key(spark, path)
+    assert key is not None and key[-3].endswith("/part-b.parquet")
+    assert P.read_parquet(spark, path).count() == 2
+    pq.write_table(pa.table({"a": [3]}), f"{path}/part-c.parquet")
+    assert P._files_key(spark, path) == key
     assert P.read_parquet(spark, path).count() == 3
-    spark.range(3, 5).write.mode("append").parquet(path)
-    after = P._files_key(spark, path)
-    assert before is not None and after is not None and before != after
-    assert P.read_parquet(spark, path).count() == 5
+    pq.write_table(pa.table({"a": [4], "b": ["x"]}), f"{path}/part-a.parquet")
+    assert P._files_key(spark, path) != key
+    df = P.read_parquet(spark, path)
+    assert df.columns == spark.read.parquet(path).columns == ["a", "b"]
+    os.rename(f"{path}/part-a.parquet", f"{path}/part-d.parquet")
+    assert P._files_key(spark, path) == key
+    assert P.read_parquet(spark, path).columns == spark.read.parquet(path).columns == ["a"]
+
+
+def test_summary_file_is_the_inferring_file(spark, tmp_path):
+    """``_common_metadata``, else ``_metadata``, wins over the data files."""
+    path = str(tmp_path / "d")
+    os.makedirs(path)
+    pq.write_table(pa.table({"a": [1]}), f"{path}/part-a.parquet")
+    pq.write_metadata(pa.schema([("a", pa.int64()), ("m", pa.string())]), f"{path}/_metadata")
+    assert P._files_key(spark, path)[-3].endswith("/_metadata")
+    assert P.read_parquet(spark, path).columns == spark.read.parquet(path).columns == ["a", "m"]
+    pq.write_metadata(pa.schema([("a", pa.int64()), ("c", pa.string())]), f"{path}/_common_metadata")
+    assert P._files_key(spark, path)[-3].endswith("/_common_metadata")
+    assert P.read_parquet(spark, path).columns == spark.read.parquet(path).columns == ["a", "c"]
 
 
 def test_partitioned_index_falls_back_to_a_plain_read(spark, tmp_path):

@@ -53,6 +53,68 @@ def test_image_urls_view(irmq_raw, irsession_raw):
     assert by_scene[("s3", "c5", "Front")].session_date == dt.date(2023, 8, 16)
 
 
+def test_transform_missing_keep_column_fails_at_build(irmq_raw, irsession_raw):
+    import pytest
+
+    with pytest.raises(ValueError, match="EvidenceImageName"):
+        transform_evidence_images(irmq_raw.drop("EvidenceImageName"))
+    with pytest.raises(ValueError, match="outletcode"):
+        transform_sessions(irsession_raw.drop("outletcode"))
+
+
+# Spark jobs of the second EP1 batch below: 2 mergeSchema scans; for the
+# append, 1 target schema inference, the batch dedup's exchange, the
+# existing keys' broadcast and the write; for the MERGE, 1 inference,
+# the source dedup's exchange, the source keys' exchange and broadcast,
+# and the write. A change here is a plan change: look at what the batch
+# runs before moving the pin.
+EP1_SECOND_BATCH_JOBS = 11
+
+
+def test_ep1_batch_job_count(spark, tmp_path, jobs_in_group, irmq_raw, irsession_raw):
+    """Two EP1 batches of the FIXTURES frames (scan -> transforms ->
+    conflict-skip append -> dedup -> MERGE) into empty targets; the
+    second batch re-delivers the first and adds session s3, and its job
+    count is pinned."""
+    from pyspark.sql import functions as F
+
+    from evidence_images_etl_airflow_spark.operators.upsert import dedup_first_wins
+    from evidence_images_etl_airflow_spark.schemas import EVIDENCE_IMAGES_PK
+    from evidence_images_etl_airflow_spark.sinks.writers import (
+        idempotent_append_parquet,
+        merge_into_parquet,
+    )
+    from evidence_images_etl_airflow_spark.sources.parquet_source import (
+        SourceConfig,
+        scan_sources,
+    )
+
+    ev_path, sess_path = str(tmp_path / "evidence_images"), str(tmp_path / "sessions")
+    for b, sessions in enumerate((["s1", "s2"], ["s1", "s2", "s3"])):
+        irmq_raw.filter(F.col("SessionUID").isin(sessions)).write.parquet(
+            f"{tmp_path}/in/b{b}/IRMQ"
+        )
+        irsession_raw.filter(F.col("Sessionuid").isin(sessions)).write.parquet(
+            f"{tmp_path}/in/b{b}/IRSession"
+        )
+    appended = []
+
+    def batch(b: int) -> None:
+        irmq = scan_sources(spark, [SourceConfig(f"{tmp_path}/in/b{b}/IRMQ")])
+        sess = scan_sources(spark, [SourceConfig(f"{tmp_path}/in/b{b}/IRSession")])
+        ev = transform_evidence_images(irmq)
+        se = dedup_first_wins(transform_sessions(sess), ["sessionuid"])
+        appended.append(idempotent_append_parquet(spark, ev, ev_path, EVIDENCE_IMAGES_PK))
+        merge_into_parquet(spark, se, sess_path, ["sessionuid"])
+
+    batch(0)
+    started, grouped = jobs_in_group("ep1_batch", lambda: batch(1))
+    assert appended == [3, 1]  # (s1,c1) (s1,c2) (s2,c4), then (s3,c5)
+    assert spark.read.parquet(sess_path).count() == 3
+    assert started == grouped
+    assert len(started) == EP1_SECOND_BATCH_JOBS
+
+
 def test_verify_first_rotation_is_well_formed():
     """The correctness-sweep emission order: every listed name exists,
     no duplicates, and the driver's 50-row window is spent on queries,

@@ -1,6 +1,7 @@
 """J2/J3/K1/K2/K5 upsert + sink tests (SURVEY.md §2.5, §2.7)."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -55,6 +56,102 @@ def test_merge_upsert_matched_and_new(spark):
     }
 
 
+def _merge_full_outer(target, source, keys, update_cols=None):
+    """The full-outer-join MERGE ``merge_upsert`` replaced, kept as the
+    reference its output is compared against."""
+    keys = list(keys)
+    non_keys = [c for c in target.columns if c not in keys]
+    update_cols = list(update_cols) if update_cols is not None else [
+        c for c in non_keys if c in source.columns
+    ]
+    t = target.alias("t")
+    s = source.withColumn("__s_present", F.lit(1)).alias("s")
+    cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
+    joined = t.join(s, cond, "full_outer")
+    s_present = F.col("s.__s_present").isNotNull()
+    out = [
+        F.when(s_present, F.col(f"s.{k}")).otherwise(F.col(f"t.{k}")).alias(k)
+        for k in keys
+    ]
+    for c in non_keys:
+        if c in update_cols:
+            out.append(
+                F.when(s_present, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+            )
+        else:
+            out.append(F.col(f"t.{c}").alias(c))
+    return joined.select(*out)
+
+
+def _rows(df):
+    return sorted(map(repr, map(tuple, df.collect())))
+
+
+MERGE_TARGET = (
+    [(1, "a", 10, "x"), (2, "b", 20, "y"), (None, "c", 30, "z"), (3, None, 40, "n")],
+    "v int, k string, n int, keep string",
+)
+
+
+@pytest.mark.parametrize(
+    "source, source_schema, keys, update_cols",
+    [
+        # key not the first column; every non-key column updated
+        ([(5, "b", 99, "B"), (7, "d", 1, "D")], "v int, k string, n int, keep string", ["k"], None),
+        # an update_cols subset: keep comes from the matched target row
+        ([(5, "b", 99, "B"), (7, "d", 1, "D")], "v int, k string, n int, keep string", ["k"], ["n"]),
+        # a target column the source lacks is kept without naming it
+        ([(5, "b", 99), (7, "d", 1)], "v int, k string, n int", ["k"], None),
+        # NULL keys match null-safely, in a composite key
+        ([(6, None, 40), (8, "c", 31)], "v int, k string, n int", ["k", "n"], None),
+        # a source type wider than the target's widens the output column
+        ([(2**40, "b", 99), (6, None, 7)], "v bigint, k string, n int", ["k"], None),
+    ],
+    ids=["key_not_first", "update_subset", "kept_column", "null_keys", "wider_source"],
+)
+def test_merge_upsert_equals_full_outer_merge(spark, source, source_schema, keys, update_cols):
+    target = spark.createDataFrame(*MERGE_TARGET)
+    src = spark.createDataFrame(source, source_schema)
+    got = merge_upsert(target, src, keys, update_cols)
+    ref = _merge_full_outer(target, src, keys, update_cols)
+    assert got.dtypes == ref.dtypes
+    assert _rows(got) == _rows(ref)
+
+
+def test_merge_upsert_duplicate_target_keys(spark):
+    """With a key repeated in the target, a matched source row appears
+    once when every non-key column is updated (the full outer join
+    repeated it per target row); with a kept column, once per matched
+    target row, as before."""
+    target = spark.createDataFrame(
+        [("b", 20, "y"), ("b", 21, "w"), ("a", 1, "x")], "k string, n int, keep string"
+    )
+    src = spark.createDataFrame([("b", 99, "B")], "k string, n int, keep string")
+    assert _rows(merge_upsert(target, src, ["k"])) == [
+        repr(("a", 1, "x")), repr(("b", 99, "B"))
+    ]
+    assert len(_rows(_merge_full_outer(target, src, ["k"]))) == 3
+    kept = merge_upsert(target, src, ["k"], ["n"])
+    assert _rows(kept) == _rows(_merge_full_outer(target, src, ["k"], ["n"]))
+    assert _rows(kept) == [repr(r) for r in (("a", 1, "x"), ("b", 99, "w"), ("b", 99, "y"))]
+
+
+def test_merge_upsert_streams_the_target_past_broadcast_source_keys(spark, tmp_path):
+    """The untouched target rows come from an anti join whose build side
+    is the source's keys: with a small deduplicated batch scanned from
+    files, as the EP1 load has, a broadcast hash join planned up front,
+    and no exchange of the target's rows."""
+    path, batch = str(tmp_path / "t"), str(tmp_path / "batch")
+    spark.range(1000).selectExpr("CAST(id AS STRING) AS k", "id AS v").write.parquet(path)
+    spark.createDataFrame([("5", 500), ("new", 1)], "k string, v bigint").write.parquet(batch)
+    src = dedup_first_wins(spark.read.parquet(batch), ["k"])
+    merged = merge_upsert(spark.read.parquet(path), src, ["k"])
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert "SortMergeJoin" not in plan
+    assert merged.count() == 1001
+
+
 def test_validate_varchar_lengths_raises(spark):
     df = spark.createDataFrame([("x" * 300,)], "cancelcallnote string")
     with pytest.raises(VarcharOverflowError):
@@ -85,6 +182,37 @@ def test_idempotent_append_parquet(spark, tmp_path):
     final = spark.read.parquet(path)
     assert final.count() == 3
     assert final.filter(F.col("v") == "CLASH").count() == 0  # conflict skipped
+
+
+def test_idempotent_append_replay_leaves_listing_unchanged(spark, tmp_path):
+    """A replayed batch appends 0 rows and adds no file: the staged
+    write is counted on itself, and a 0-row staging is dropped."""
+    path = str(tmp_path / "evidence")
+    batch = spark.createDataFrame(
+        [("s1", "c1", "v1"), ("s1", "c2", "v2")], "sessionuid string, sceneuid string, v string"
+    )
+    keys = ["sessionuid", "sceneuid"]
+    assert idempotent_append_parquet(spark, batch, path, keys) == 2
+    listing = sorted(os.listdir(path))
+    for _ in range(2):
+        assert idempotent_append_parquet(spark, batch, path, keys) == 0
+        assert sorted(os.listdir(path)) == listing
+    assert sorted(os.listdir(tmp_path)) == ["evidence"]  # no staging left
+
+
+def test_idempotent_append_restores_a_swapped_aside_target(spark, tmp_path):
+    """The crash state of a swap (target renamed to ``__backup``, no new
+    target): the append is computed against the backup's keys, and the
+    backup is renamed back into place before the new rows land."""
+    path = str(tmp_path / "t")
+    keys = ["k"]
+    schema = "k string, v bigint"
+    idempotent_append_parquet(spark, spark.createDataFrame([("a", 1)], schema), path, keys)
+    os.rename(path, path + "__backup")
+    batch = spark.createDataFrame([("a", 9), ("b", 2)], schema)
+    assert idempotent_append_parquet(spark, batch, path, keys) == 1
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == [("a", 1), ("b", 2)]
 
 
 def test_merge_into_parquet(spark, tmp_path):
